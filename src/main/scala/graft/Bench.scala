@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs every registered query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
   * A small uncounted warmup first touches parquet reading + codegen paths
@@ -21,43 +19,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // same guard posture as Verify: scale regressions fail fast
-      .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
-      .config("spark.graft.guard.globalWindow", "error")
-      // AQE SMJ->SHJ rewrite (guide §3.1): when EVERY post-shuffle
-      // partition of a sort-merge join is under this threshold, AQE
-      // replaces the join with a shuffled-hash join at runtime — the
-      // sort is pure waste at that size. Scale-adaptive by construction
-      // (at production volumes partitions exceed the bound and SMJ
-      // stays; the bound caps the per-task build-side hash map, 64m <<
-      // task memory), env-parameterized like the core count. Measured
-      // r13: 18 of 20 SMJ-planning queries faster, subset total -11.5%
-      // (graph_ktruss 0.70x, graph_scc_seeds 0.84x), two within noise.
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_THRESHOLD", "64m"))
-      // AQE partition coalescing floor (guide §2.2 "fewer, larger reduce
-      // partitions"): with parallelismFirst (kept true — the r14 A/B of
-      // parallelismFirst=false DOUBLED graph_triangles/squares, whose
-      // compute-dense shuffles must keep core-count parallelism), AQE's
-      // coalescing target is max(totalShuffleBytes/parallelism,
-      // minPartitionSize). Raising the floor 1m -> 2m only touches
-      // shuffles under 2m x parallelism TOTAL — the scheduling-bound
-      // tail — and is a structural no-op at production volumes (any
-      // real shuffle's bytes/core far exceeds 2m). r14 A/B, 20-query
-      // subset reps-4 same-window: 59.4 -> 52.8 s (-11%), no query
-      // slower than 1.02x, ts_seasonal_esd 0.81x, q21 0.78x; the 4m and
-      // 8m floors regressed the graph heavies (evidence in
-      // OPTIMIZATION_r14.md). Env-parameterized like the core count.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true"))
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_SIZE", "2m"))
-      .getOrCreate()
+    val spark = GraftSession(s"local[$cpus]", cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
 
     def probe(): Double = { // fixed, cheap, stable: the noise sentinel
@@ -86,12 +48,11 @@ object Bench {
       if (names.isEmpty) SparkEntry.queries.toSeq.sortBy(_._1)
       else names.flatMap(n => SparkEntry.queries.get(n).map(n -> _))
     val probes = scala.collection.mutable.ArrayBuffer[Double](probe())
-    // per-pass sums: pass 1 is the SINGLE-PASS COLD total (codegen compile
-    // included) — reported as total_cold beside the min-of-passes total so
-    // the baseline comparison isn't methodology-flattered (r8 verdict #6)
-    val passTotals = scala.collection.mutable.ArrayBuffer[Double]()
-    val samples = (1 to passes).flatMap { _ =>
-      val pass = selected.map { case (name, fn) =>
+    // a query that throws is reported under "failed" and left out of
+    // every total: its partial time measures the failure, not the query
+    val failed = scala.collection.mutable.LinkedHashSet[String]()
+    val samples = (1 to passes).map { _ =>
+      val pass = selected.flatMap { case (name, fn) =>
         // previous query's persisted intermediates: teardown OUTSIDE the
         // timed region. clearCache drops catalog-cached plans only —
         // localCheckpoint/persist RDD blocks accumulate across a 228-query
@@ -106,29 +67,37 @@ object Bench {
         // concurrent block-removal storm)
         spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        name -> (System.nanoTime() - t0) / 1e9
-      }
-      passTotals += pass.map(_._2).sum
+        try { fn(spark, sfDir).count(); Some(name -> (System.nanoTime() - t0) / 1e9) }
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] $name failed: $e")
+          failed += name
+          None
+        }
+      }.toMap
       probes += probe()
       pass
     }
-    val best = samples.groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).min }
-    val results = selected.map { case (name, _) => name -> best(name) }
+    val results = selected.map(_._1).filterNot(failed)
+      .map(name => name -> samples.map(_(name)).min)
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
+    // pass 1 is the SINGLE-PASS COLD total (codegen compile included) —
+    // reported as total_cold beside the min-of-passes total so the
+    // baseline comparison isn't methodology-flattered (r8 verdict #6)
+    val totalCold = results.map { case (name, _) => samples.head(name) }.sum
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val noise = {
       val lo = probes.min
       val ratio = if (lo > 0) probes.max / lo else 1.0
       s"""{"probe_sec":${probes.map(p => f"$p%.3f").mkString("[", ",", "]")},"ratio":${f"$ratio%.2f"}}"""
     }
     val coldMin =
-      s""""total_cold":${passTotals.head},"total_min":$total"""
+      s""""total_cold":$totalCold,"total_min":$total,"failed":$failedJson"""
     val full =
       s"""{"metric":"total","value":$total,"unit":"sec",$coldMin,"queries":$qs,"passes":$passes,"host_noise":$noise,"sf":"$sfDir"}"""
-    // Full line first (it is long and sbt prefixes [info]; a tail window
-    // can truncate it — round-3 BENCH files all had parsed:null), then a
+    // Full line first (it is long; a tail window can truncate it —
+    // round-3 BENCH files all had parsed:null), then a
     // short bare totals line that truncation can't eat, and the full JSON
     // to a fixed path for out-of-band pickup.
     println(full)
@@ -160,5 +129,6 @@ object Bench {
         System.err.println(s"WARNING: bench_history archive write failed: $e")
     }
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

@@ -1,16 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only: candidate-VOLUME ladder for dedup_lsh_bands — separates
   * algorithmic growth (candidate counts per config) from machine
   * effects (page cache, spill) in the DevScale curvature readings.
   */
 object DevBandsVol {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession("local[32]", 32)
     spark.sparkContext.setLogLevel("ERROR")
     Seq(("x1", "/root/testdata/sf0.1"),
       ("x8", "/tmp/graft_devscale/v3/x8"),

@@ -204,39 +204,17 @@ object DevBpe {
   }
 
   def main(args: Array[String]): Unit = {
-    if (args.contains("deeptrain4k")) {
-      val spark = SparkSession.builder().master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "false").getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
-      runDeepTrain4k(spark)
-      spark.stop()
-      return
-    }
-    if (args.contains("deeptrain")) {
-      val spark = SparkSession.builder().master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "false").getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
-      runDeepTrain(spark)
-      spark.stop()
-      return
-    }
-    if (args.contains("sweep")) {
-      val spark = SparkSession.builder().master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "false").getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
-      runSweep(spark)
-      spark.stop()
-      return
-    }
-    val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val rounds = 4
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession("local[32]", 32)
     spark.sparkContext.setLogLevel("ERROR")
+    if (args.contains("deeptrain4k")) runDeepTrain4k(spark)
+    else if (args.contains("deeptrain")) runDeepTrain(spark)
+    else if (args.contains("sweep")) runSweep(spark)
+    else runVariants(spark, if (args.nonEmpty) args(0) else "/root/testdata/sf0.1")
+    spark.stop()
+  }
+
+  private def runVariants(spark: SparkSession, dir: String): Unit = {
+    val rounds = 4
     def time[T](label: String)(f: => T): T = {
       val t0 = System.nanoTime(); val r = f
       println(f"[devbpe] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s"); r
@@ -301,6 +279,5 @@ object DevBpe {
     }
     println(s"[devbpe] final symbol counts: strings=$na arrays=$nb " +
       (if (na == nb) "(MATCH)" else "(MISMATCH — semantics bug!)"))
-    spark.stop()
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only: page-cache-CONTROLLED time rungs for graph_coloring_mis
   * (r10 verdict task #7) — the second-heaviest bench query, whose ×8
   * DevScale cells showed the ±3× host-swing band (36-167 s) and whose
@@ -18,12 +16,7 @@ object DevColorRung {
   def main(args: Array[String]): Unit = {
     val dirs = if (args.nonEmpty) args.toSeq
       else Seq("/tmp/graft_devscale/v3/x32", "/tmp/graft_devscale/v3/x128")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "128")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
-      .getOrCreate()
+    val spark = GraftSession("local[32]", 128)
     spark.sparkContext.setLogLevel("ERROR")
     def teardown(): Unit = {
       spark.catalog.clearCache()

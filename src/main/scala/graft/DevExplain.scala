@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only: dump formatted physical plans for plan-quality review
   * (pushdown / pruning / broadcast / partial agg / codegen spans).
   */
@@ -14,26 +12,7 @@ object DevExplain {
     val (exec, rest) = args.partition(_ == "--exec")
     val sfDir = if (rest.nonEmpty) rest(0) else "/root/testdata/sf0.01"
     val names = if (rest.length > 1) rest.drop(1).toSet else Set.empty[String]
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // same session posture as Verify/Bench so captured plans match the
-      // plans the driver actually measures (TopKRewrite etc. active,
-      // including the AQE SMJ->SHJ threshold — without it these dumps
-      // would show SMJ where Bench runs SHJ). Caveat: explainString on
-      // an unexecuted query prints the INITIAL AQE plan
-      // (isFinalPlan=false); runtime rewrites like the SHJ swap only
-      // appear after a .collect(), so SMJ here may still execute as SHJ.
-      .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
-      .config("spark.graft.guard.globalWindow", "error")
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_THRESHOLD", "64m"))
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true"))
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_SIZE", "2m"))
-      .getOrCreate()
+    val spark = GraftSession("local[8]", 8)
     spark.sparkContext.setLogLevel("ERROR")
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       if (names.isEmpty || names.contains(name)) {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-only: VOLUME ladder for the graph family — the quantities that
@@ -15,9 +14,7 @@ import org.apache.spark.sql.functions._
   */
 object DevGraphVol {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession("local[32]", 64)
     spark.sparkContext.setLogLevel("ERROR")
     Seq(("x1", "/root/testdata/sf0.1"),
       ("x8", "/tmp/graft_devscale/v3/x8"),

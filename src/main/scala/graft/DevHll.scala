@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only: measure graph_effective_diameter's HyperANF HLL estimate
   * error at each SF — the input for choosing the r8-verdict-#9 bucket
   * edges (surface the estimate as a coarse bucket beside the n4_est_ok
@@ -11,10 +9,7 @@ import org.apache.spark.sql.SparkSession
   */
 object DevHll {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession("local[16]", 16)
     spark.sparkContext.setLogLevel("ERROR")
     Seq("sf0.001", "sf0.01", "sf0.1").foreach { sf =>
       val dir = s"/root/testdata/$sf"

@@ -37,11 +37,7 @@ import org.apache.spark.sql.functions._
   */
 object DevR10Vol {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = GraftSession("local[32]", 64)
     spark.sparkContext.setLogLevel("ERROR")
     val only = args.toSet
     def want(f: String) = only.isEmpty || only.contains(f)

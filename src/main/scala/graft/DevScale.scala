@@ -103,12 +103,7 @@ object DevScale {
     "ts_seasonal_esd")
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
-      .config("spark.graft.guard.globalWindow", "error")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession("local[32]", 32)
     spark.sparkContext.setLogLevel("ERROR")
 
     val src = "/root/testdata/sf0.1"

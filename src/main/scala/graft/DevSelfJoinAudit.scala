@@ -1,19 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev harness: enumerate uncapped self-joins per registered query
   * (plan-only). `runMain graft.DevSelfJoinAudit [sfDir]`.
   */
 object DevSelfJoinAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession("local[4]", 4)
     spark.sparkContext.setLogLevel("ERROR")
     val results = SelfJoinAudit.audit(spark, sfDir)
     results.filter(r => r.uncapped > 0 || r.err.isDefined).foreach { r =>

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, ExprId, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, Literal, WindowExpression}
+import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, ExprId, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, Literal, PredicateHelper, WindowExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, GlobalLimit, Join, LocalLimit, LocalRelation, LogicalPlan, Project, Window}
 import org.apache.spark.sql.catalyst.plans.{LeftAnti, LeftSemi}
@@ -18,7 +18,7 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * ScaleSpec twin asserts the result equals the curated allowlist, so
   * a new uncapped self-join cannot land without a conscious exemption.
   */
-object SelfJoinAudit {
+object SelfJoinAudit extends PredicateHelper {
 
   final case class Result(name: String, uncapped: Int, err: Option[String])
 
@@ -44,10 +44,11 @@ object SelfJoinAudit {
     case other => other.children.flatMap(rowLevelScans).toSet
   }
 
-  /** Some(window) when `f` is the count-cap shape: its condition bounds
-    * (<= / < a literal) an attribute produced as a full-partition
-    * count(*) window over a non-empty partition spec, and that Window
-    * is f's child (one interposed Project tolerated).
+  /** Some(window) when `f` is the count-cap shape: a top-level conjunct
+    * of its condition bounds (<= / < a literal) an attribute produced
+    * as a full-partition count(*) window over a non-empty partition
+    * spec, and that Window is f's child (one interposed Project
+    * tolerated).
     */
   private def capBoundary(f: Filter): Option[Window] = {
     val w = f.child match {
@@ -63,12 +64,15 @@ object SelfJoinAudit {
               case _ => false
             }) && win.partitionSpec.nonEmpty => a.exprId
       }.toSet
-      capped.nonEmpty && f.condition.collectFirst {
-        case LessThanOrEqual(a: AttributeReference, Literal(_, _)) if capped(a.exprId) => true
-        case LessThan(a: AttributeReference, Literal(_, _)) if capped(a.exprId) => true
-        case GreaterThanOrEqual(Literal(_, _), a: AttributeReference) if capped(a.exprId) => true
-        case GreaterThan(Literal(_, _), a: AttributeReference) if capped(a.exprId) => true
-      }.isDefined
+      // a TOP-LEVEL conjunct only: under an OR the cap bounds one branch
+      // and the other branch passes every row of a hot key
+      capped.nonEmpty && splitConjunctivePredicates(f.condition).exists {
+        case LessThanOrEqual(a: AttributeReference, Literal(_, _)) => capped(a.exprId)
+        case LessThan(a: AttributeReference, Literal(_, _)) => capped(a.exprId)
+        case GreaterThanOrEqual(Literal(_, _), a: AttributeReference) => capped(a.exprId)
+        case GreaterThan(Literal(_, _), a: AttributeReference) => capped(a.exprId)
+        case _ => false
+      }
     }
   }
 

@@ -31,30 +31,30 @@ object Tables {
   // Plan-handle memo, NOT a result cache: spark.read.parquet resolves a
   // DataSource + lists the path + reads parquet footers for schema on
   // EVERY call, driver-side work each query re-pays inside its timed
-  // region. The memo keys the resolved (lazy, unexecuted) DataFrame on
-  // the session instance so repeated reads of the same static table
-  // skip re-resolution; every action still scans the parquet fresh —
-  // no data, no results, no persisted blocks live here. Weak keys: a
-  // stopped test session releases its entries. Caveat: a harness that
-  // OVERWRITES a parquet path and re-reads it through Tables.t in the
-  // SAME session would see the stale file listing — the repo's
-  // overwrite-then-reread sites (DevScale tiling, TrainerCoverageSpec
-  // planted corpora) all use fresh dirs per generation.
-  // GRAFT_NO_READ_MEMO=1 disables (the same-window A/B kill-switch).
-  private val readMemo =
-    new java.util.WeakHashMap[SparkSession, scala.collection.mutable.HashMap[String, DataFrame]]
-  private val memoOff = sys.env.get("GRAFT_NO_READ_MEMO").contains("1")
+  // region. The memo holds the resolved (lazy, unexecuted) DataFrames of
+  // the most recent session to call, so repeated reads of the same
+  // static table skip re-resolution; every action still scans the
+  // parquet fresh — no data, no results, no persisted blocks live here.
+  // One session at a time: each memoized DataFrame holds its session
+  // strongly, so a map keyed by session (even weakly) could never free a
+  // stopped one; a call from a different session replaces the memo and
+  // releases the previous session. Repeated t() calls return the SAME
+  // DataFrame, so a self-join of two t() results must alias its sides
+  // (unaliased, Spark either resolves it correctly or throws
+  // AnalysisException — it never returns a wrong count; TablesSpec pins
+  // this). Caveat: a harness that OVERWRITES a parquet path and re-reads
+  // it through Tables.t in the SAME session would see the stale file
+  // listing — the repo's overwrite-then-reread sites (DevScale tiling,
+  // TrainerCoverageSpec planted corpora) all use fresh dirs per
+  // generation.
+  private var memoSession: SparkSession = _
+  private val memo = scala.collection.mutable.HashMap.empty[String, DataFrame]
 
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
     tune(spark)
-    if (memoOff) return spark.read.parquet(s"$dir/$name.parquet")
-    val m = readMemo.synchronized {
-      var inner = readMemo.get(spark)
-      if (inner == null) { inner = scala.collection.mutable.HashMap.empty; readMemo.put(spark, inner) }
-      inner
-    }
-    m.synchronized {
-      m.getOrElseUpdate(s"$dir/$name", spark.read.parquet(s"$dir/$name.parquet"))
+    synchronized {
+      if (memoSession ne spark) { memo.clear(); memoSession = spark }
+      memo.getOrElseUpdate(s"$dir/$name", spark.read.parquet(s"$dir/$name.parquet"))
     }
   }
 

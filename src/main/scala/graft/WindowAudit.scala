@@ -8,8 +8,8 @@ import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, GlobalLimit, Loca
   * [[graft.plans.GlobalWindowGuard]]'s rules — Aggregate/Limit/
   * LocalRelation below the window) vs data-sized. Data-sized global
   * windows move every row through one task at cluster scale; the audit
-  * runs both as [[DevWindowAudit]] and as a ScalaTest spec so a new
-  * query can't reintroduce one (round-3 hybrid_rrf lesson).
+  * runs as a ScalaTest spec (WindowAuditSpec) so a new query can't
+  * reintroduce one (round-3 hybrid_rrf lesson).
   */
 object WindowAudit {
 

@@ -107,7 +107,7 @@ object Ann {
     * greedy pays it once and then small BATCHED re-evaluations: the
     * top ≤ 8 stale entries refresh in ONE corpus × batch aggregation
     * per loop step (each separate single-candidate job was paying a
-    * fresh whole-stage-codegen compile — the DevTopk/DevNsw tax; the
+    * fresh whole-stage-codegen compile — the tax the NSW truncation A/B measured; the
     * batch form is one scheduled job and one compiled plan). A pick is
     * accepted only when the queue's TOP entry is fresh-this-round, so
     * the selection logic is unchanged. The queue orders by (stale gain

@@ -653,7 +653,7 @@ object Graph {
     * the wedge machinery walks its input ~5 ways, so a chained lineage
     * fans out ~5^rounds plan copies and pays the per-level codegen
     * compile tax (53 s on a 33-edge graph, measured) — truncating the
-    * tiny intermediate is the DevNsw rule applied here (6.5 s after,
+    * tiny intermediate is the NSW truncation rule applied here (6.5 s after,
     * same graph, cold).
     */
   def trussPeel(
@@ -1330,7 +1330,7 @@ object Graph {
     * the closeness/landmark queries do. Scale: each BFS level is one
     * hash join + map-side-combinable aggregate on the frontier; the
     * backward sweep the same shape per level; tiny frontiers are
-    * plan-truncated with eager localCheckpoint (the DevNsw rule —
+    * plan-truncated with eager localCheckpoint (the NSW truncation rule —
     * per-level codegen compile would dominate otherwise). ANSI mode
     * turns any σ/δ overflow on a pathological graph into a loud error,
     * never silent wrap.
@@ -1479,8 +1479,8 @@ object Graph {
     * graphs run the distributed per-round loop at TWO scheduled jobs per
     * round (each round's relation is lazily persisted and materialized
     * by the count the trace needs anyway — r8 verdict #3 cut this from
-    * four; `smallCutoff = 0` pins the distributed path in tests, DevMis
-    * records the job-count measurement).
+    * four; `smallCutoff = 0` pins the distributed path in tests; the
+    * job-count measurement is in OPTIMIZATION_r14.md).
     */
   def lubyMis(
       edgeList: DataFrame,

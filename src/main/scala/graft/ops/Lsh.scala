@@ -168,7 +168,7 @@ object Lsh {
     import org.apache.spark.sql.expressions.Window
     // global df attaches as ONE window count on the token exchange —
     // the groupBy + shuffle-join-back form re-shuffled the identical
-    // posting volume and lost ~1.5 s at sf0.1 (DevPrefix A/B, both reps)
+    // posting volume and lost ~1.5 s at sf0.1 (prefix-filter A/B, both reps)
     sh.select(col(idCol), col(shCol),
         count(lit(1)).over(Window.partitionBy(shCol)).as("_df"))
       .select(col(idCol), col(shCol),

@@ -26,19 +26,19 @@ object Scale {
     * scheduling back-fills one chain's straggler tail with the other's
     * tasks. Use ONLY for chains with no data dependency — the thunks
     * must not read each other's results.
+    *
+    * `a` runs on a thread created for this call and `b` on the caller's.
+    * Spark's local properties (job group, scheduler pool, query name)
+    * are inheritable thread-locals copied when a thread is CREATED, so
+    * a fresh thread sees the caller's current values; a pooled thread
+    * would keep whatever its creator held.
     */
   def concurrently[A, B](a: => A, b: => B): (A, B) = {
-    // kill-switch for same-window A/B measurement (and as an escape
-    // hatch on schedulers where concurrent driver jobs misbehave)
-    if (sys.env.get("GRAFT_SEQUENTIAL").contains("1")) (a, b)
-    else {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val fa = Future(a)
-      val fb = Future(b)
-      (Await.result(fa, Duration.Inf), Await.result(fb, Duration.Inf))
-    }
+    var ra: Either[Throwable, A] = null
+    val t = new Thread(() => ra = try Right(a) catch { case e: Throwable => Left(e) })
+    t.start()
+    val rb = try b finally t.join()
+    (ra.fold(e => throw e, identity), rb)
   }
 
   /** Two-phase skew-resistant aggregation: sum/count-style (associative)

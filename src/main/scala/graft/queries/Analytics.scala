@@ -1572,28 +1572,29 @@ object Analytics {
     * engines produce the SAME meter values; GeoSpec grades the meters
     * against StrictMath haversine on reference city pairs.
     */
-  /** [[qGeoHaversine]]'s plan, parameterized for the DevGeo A/B (r8
-    * verdict #2): `ckptUnit` truncates after the rotation-CORDIC unit
-    * vectors, `ckptC2` after the chord² join — each cut splits the
-    * ~90-stage fused projection chain so whole-stage codegen compiles
-    * two shallower trees instead of one deep one, at the cost of
-    * materializing a (user_id + 3·bigint) relation.
+  /** [[qGeoHaversine]]'s plan per the geo CORDIC A/B (r8 verdict #2):
+    * one cut after the rotation-CORDIC unit vectors, one after the
+    * chord² join — each cut splits the ~90-stage fused projection chain
+    * so whole-stage codegen compiles two shallower trees instead of one
+    * deep one, at the cost of materializing a (user_id + 3·bigint)
+    * relation.
     *
-    * MEASURED (DevGeo, sf0.1, local[32], 3 interleaved reps, quiet,
+    * MEASURED (sf0.1, local[32], 3 interleaved reps, quiet,
     * 2026-08-15): fused cold 11.93 s / warm-min 2.61; ckpt-unit 4.13 /
     * 2.33; ckpt-c2 2.69 / 2.05; ckpt-both 2.25 / 2.02. The deep fused
-    * chain pays a brutal first-execution codegen-compile tax (the
-    * DevNsw signature) and still loses warm. ADOPTED: ckpt-both (house
-    * rule: win on both axes). The checkpointed relations are tiny —
-    * distinct users × 4 longs and × 2 longs.
+    * chain pays a brutal first-execution codegen-compile tax (the NSW
+    * truncation signature, OPTIMIZATION_r14.md) and still loses warm.
+    * ADOPTED: ckpt-both (house rule: win on both axes). The
+    * checkpointed relations are tiny — distinct users × 4 longs and × 2
+    * longs.
     */
-  private[graft] def geoHaversineBuild(s: SparkSession, dir: String,
-      ckptUnit: Boolean, ckptC2: Boolean): org.apache.spark.sql.DataFrame = {
+  private def geoHaversineBuild(
+      s: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
     import graft.ops.Geo
-    val pts0 = Geo.applyStages(geoPoints(s, dir),
+    val pts = Geo.applyStages(geoPoints(s, dir),
         Geo.unitVectorStages("p", "lat", "lon"))
       .select(col("user_id"), col("pux"), col("puy"), col("puz"))
-    val pts = if (ckptUnit) pts0.localCheckpoint(true) else pts0
+      .localCheckpoint(true)
     val ref = Geo.applyStages(
         s.range(1).select(col("id").as("ref_id"))
           .withColumn("rlat", expr("CAST(conv(substr(md5(concat('rlat', " +
@@ -1602,10 +1603,10 @@ object Analytics {
             "CAST(ref_id AS STRING))), 1, 15), 16, 10) AS BIGINT) % 360000000 - 180000000")),
         Geo.unitVectorStages("r", "rlat", "rlon"))
       .select(col("rux"), col("ruy"), col("ruz"))
-    val d0 = pts.crossJoin(broadcast(ref))
+    val d = pts.crossJoin(broadcast(ref))
       .withColumn("c2", expr("(pux - rux) * (pux - rux) + " +
         "(puy - ruy) * (puy - ruy) + (puz - ruz) * (puz - ruz)"))
-    val d = if (ckptC2) d0.select("user_id", "c2").localCheckpoint(true) else d0
+      .select("user_id", "c2").localCheckpoint(true)
     Geo.applyStages(d, Geo.greatCircleMetersStages("g", "c2", "DIV"))
       .withColumn("band_1000km", expr("gm DIV 1000000"))
       .groupBy("band_1000km")
@@ -1615,7 +1616,7 @@ object Analytics {
   }
 
   val qGeoHaversine: Q = Q("geo_haversine_ref", (s, dir) =>
-    geoHaversineBuild(s, dir, ckptUnit = true, ckptC2 = true), Some {
+    geoHaversineBuild(s, dir), Some {
     import graft.ops.Geo
     val (ptChain, ptLast) = Geo.duckStageChain("hp", "p",
       Geo.unitVectorStages("p", "lat", "lon"))
@@ -1652,7 +1653,7 @@ object Analytics {
     * .greatCircleMetersStages]]) — per site: assigned points and the
     * min/max/mean meters, the capacity-planning table ("how far is
     * this site's catchment really"). Mean is sum DIV n — exact integer
-    * both engines. Plan shape per the DevGeo A/B: localCheckpoint at
+    * both engines. Plan shape per the geo CORDIC A/B: localCheckpoint at
     * both chain joints (unit vectors; post-argmin chord²) — the argmin
     * aggregation already bounds the meters chain's input to one row
     * per point, and the deep projection chains codegen separately.

@@ -190,7 +190,7 @@ object Dedup {
   /** Hashed shingles: gram STRINGS leave the pipeline at the explode —
     * every shuffle key, window partition, join key and count below runs
     * on the canonical md5-derived 60-bit long (the MinHash/SimHash
-    * parity hash). Same move as dedup_prefix_filter's DevPrefix-measured
+    * parity hash). Same move as dedup_prefix_filter's A/B-measured
     * 6.9→4.1 s at sf0.1: 8-byte fixed-width exchange rows instead of
     * ~20-byte gram strings, and long equality in the joins.
     */
@@ -349,7 +349,7 @@ object Dedup {
     // gram STRINGS leave the pipeline at the explode: every window sort,
     // join key, array element and intersect below runs on the canonical
     // md5-derived 60-bit long (the MinHash/SimHash parity hash) — the
-    // DevPrefix-measured 6.9→4.1 s move at sf0.1, bit-exact because
+    // prefix-filter A/B-measured 6.9→4.1 s move at sf0.1, bit-exact because
     // both engines hash identically (a within-doc 2^-60 collision would
     // merge the same two grams on both sides)
     val sh = hashedShingles(s, dir).persist()

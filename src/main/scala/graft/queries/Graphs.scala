@@ -141,7 +141,7 @@ object Graphs {
     * one label-equi pair join and two tiny aggregates.
     */
   val modularity: Q = Q("graph_modularity", (s, dir) => {
-    val je = simEdges(s, dir).localCheckpoint(true) // tiny graph, deep plan (DevSeeds)
+    val je = simEdges(s, dir).localCheckpoint(true) // tiny graph, deep plan (seed profile)
     val labels = graft.ops.Graph.labelPropagation(je, iters = 4).persist()
     val m = je.agg(count(lit(1)).as("m"))
     val deg = je.select(col("src").as("v")).union(je.select(col("dst").as("v")))
@@ -217,7 +217,7 @@ object Graphs {
     * moment agg.
     */
   val assortativity: Q = Q("graph_assortativity", (s, dir) => {
-    val je = simEdges(s, dir).localCheckpoint(true) // tiny graph, deep plan (DevSeeds)
+    val je = simEdges(s, dir).localCheckpoint(true) // tiny graph, deep plan (seed profile)
     val ed = je.union(je.select(col("dst").as("src"), col("src").as("dst")))
     val deg = ed.groupBy(col("src").as("v")).agg(count(lit(1)).as("d"))
     val pairs = ed
@@ -393,7 +393,7 @@ object Graphs {
     * state bigger than (walk, position).
     */
   val randomWalks: Q = Q("graph_random_walks", (s, dir) => {
-    val e = simEdges(s, dir).localCheckpoint(true) // tiny graph, deep plan (DevSeeds)
+    val e = simEdges(s, dir).localCheckpoint(true) // tiny graph, deep plan (seed profile)
     val und = e.select(col("src").as("u"), col("dst").as("v"))
       .union(e.select(col("dst").as("u"), col("src").as("v")))
     val w0 = und.select(col("u").as("walk")).distinct()
@@ -534,7 +534,7 @@ object Graphs {
     // the similarity-graph subtree feeds the seed scan, the product
     // graph, and bfsHops' count gate — and the graph is TINY (<=C(60,2)
     // edges) under a deep scan+join plan, so eager localCheckpoint
-    // truncates the lineage every downstream job re-walks (DevSeeds:
+    // truncates the lineage every downstream job re-walks (seed profile:
     // persist left ~1.5 s of small-job overhead on the table)
     val e = simEdges(s, dir).localCheckpoint(true)
     val verts = e.select(col("src").as("v")).union(e.select(col("dst").as("v")))
@@ -598,7 +598,7 @@ object Graphs {
     * measures the HLL error per SF off it.
     */
   private[graft] def effectiveDiameterDiag(s: SparkSession, dir: String): DataFrame = {
-    val e = simEdges(s, dir).localCheckpoint(true) // tiny graph, deep plan (DevSeeds)
+    val e = simEdges(s, dir).localCheckpoint(true) // tiny graph, deep plan (seed profile)
     val verts = e.select(col("src").as("v")).union(e.select(col("dst").as("v")))
       .distinct().localCheckpoint(true)
     val domainGate = verts.agg(max("v").as("mx"), min("v").as("mn"))
@@ -788,7 +788,7 @@ object Graphs {
     * playbook, unneeded on this bounded (≤60-vertex) similarity graph.
     */
   val squares: Q = Q("graph_squares", (s, dir) => {
-    val je = simEdges(s, dir).localCheckpoint(true) // tiny graph, deep plan (DevSeeds)
+    val je = simEdges(s, dir).localCheckpoint(true) // tiny graph, deep plan (seed profile)
     val ed = je.union(je.select(col("dst").as("src"), col("src").as("dst"))).persist()
     val a = ed.select(col("dst").as("m"), col("src").as("u"))
     val b = ed.select(col("dst").as("m2"), col("src").as("w"))
@@ -1047,7 +1047,7 @@ object Graphs {
     * reads before carving a web graph into per-SCC shards. Scale
     * shape: same discipline as [[bfsHops]]/[[temporalReach]] — degree-
     * capped edges, per-round keyed joins on the (tiny) frontier,
-    * per-round localCheckpoint truncation (the DevNsw rule); the
+    * per-round localCheckpoint truncation (the NSW truncation rule); the
     * oracle unrolls both chains as MATERIALIZED CTEs.
     */
   val sccSeeds: Q = Q("graph_scc_seeds", (s, dir) => {
@@ -1119,7 +1119,7 @@ object Graphs {
     * Scale: contact cells are capGroups-capped at 20 (the lint's
     * self-join contract — a hot cell cannot emit df² contacts);
     * per-round joins key on the frontier vertex; tiny per-round state
-    * is plan-truncated (DevNsw rule).
+    * is plan-truncated (NSW truncation rule).
     */
   val temporalReach: Q = Q("graph_temporal_reach", (s, dir) => {
     val c = Tables.events(s, dir).filter(col("user_id") < 60)
@@ -1190,7 +1190,7 @@ object Graphs {
     * and every δ term is integer arithmetic shared by both engines.
     */
   val betweennessSeedsQ: Q = Q("graph_betweenness_seeds", (s, dir) => {
-    val e = simEdges(s, dir).localCheckpoint(true) // tiny graph, deep plan (DevSeeds)
+    val e = simEdges(s, dir).localCheckpoint(true) // tiny graph, deep plan (seed profile)
     val verts = e.select(col("src").as("v")).union(e.select(col("dst").as("v")))
       .distinct()
     val domainGate = verts.agg(max("v").as("mx"), min("v").as("mn"))
@@ -1266,7 +1266,7 @@ object Graphs {
     */
   val richClub: Q = Q("graph_rich_club", (s, dir) => {
     import s.implicits._
-    val je = simEdges(s, dir).localCheckpoint(true) // tiny graph, deep plan (DevSeeds)
+    val je = simEdges(s, dir).localCheckpoint(true) // tiny graph, deep plan (seed profile)
     val ed = je.union(je.select(col("dst").as("src"), col("src").as("dst")))
     val deg = ed.groupBy(col("src").as("v")).agg(count(lit(1)).as("d"))
     val em = je
@@ -1365,7 +1365,7 @@ object Graphs {
     * (k)-group agg — every shuffle on bounded keys.
     */
   val knnDegree: Q = Q("graph_knn_degree", (s, dir) => {
-    val je = simEdges(s, dir).localCheckpoint(true) // tiny graph, deep plan (DevSeeds)
+    val je = simEdges(s, dir).localCheckpoint(true) // tiny graph, deep plan (seed profile)
     val ed = je.union(je.select(col("dst").as("src"), col("src").as("dst")))
     val deg = ed.groupBy(col("src").as("v")).agg(count(lit(1)).as("d"))
     ed.join(deg.select(col("v").as("src"), col("d").as("da")), "src")
@@ -1400,7 +1400,7 @@ object Graphs {
     * integer — counts and one truncating DIV — so bit-exact.
     */
   val clusteringLocal: Q = Q("graph_clustering_local", (s, dir) => {
-    val e = simEdges(s, dir).localCheckpoint(true) // tiny graph, deep plan (DevSeeds)
+    val e = simEdges(s, dir).localCheckpoint(true) // tiny graph, deep plan (seed profile)
     val tri = graft.ops.Graph.triangles(e)
     val deg = e.select(col("src").as("v")).union(e.select(col("dst").as("v")))
       .groupBy("v").agg(count(lit(1)).as("deg"))
@@ -1456,7 +1456,7 @@ object Graphs {
     * second sweep's reach count.
     */
   val diameterSweep: Q = Q("graph_diameter_sweep", (s, dir) => {
-    val e = simEdges(s, dir).localCheckpoint(true) // tiny graph, deep plan (DevSeeds)
+    val e = simEdges(s, dir).localCheckpoint(true) // tiny graph, deep plan (seed profile)
     val verts = e.select(col("src").as("v")).union(e.select(col("dst").as("v")))
     val s0 = verts.agg(min("v").as("v"))
     val h1 = graft.ops.Graph.bfsHops(e, s0, maxDepth = 8)
@@ -1504,7 +1504,8 @@ object Graphs {
     // the degree caps bound edges at 64·V (V = #parts), so the counted
     // gate can sit at 2M (~30 MB driver state max) — at sf0.1 the 309k
     // collected edges loop in milliseconds where the 7-round distributed
-    // loop paid 16.7 s of per-round job scheduling (DevMis measurement)
+    // loop paid 16.7 s of per-round job scheduling (the MIS loop
+    // measurement, OPTIMIZATION_r14.md)
     val (trace, indep, maximal) = graft.ops.Graph.lubyMis(
       partTransitions(s, dir), "src", "dst", maxRounds = 24,
       smallCutoff = 2000000L)

@@ -3345,7 +3345,7 @@ object Series {
         s"${graft.ops.Sketch.h60("'cw2'", "CAST(h AS STRING)")} % 401 - 200"))
     val cum = Window.orderBy("h")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // tiny-intermediate truncation (the DevNsw rule): walk, za and the
+    // tiny-intermediate truncation (the NSW truncation rule): walk, za and the
     // pair relation are a few hundred rows each but sit under DEEP
     // multi-referenced subtrees — eager localCheckpoint collapses the
     // re-executed lineage and the per-level codegen tax (3.9 s -> ~1 s

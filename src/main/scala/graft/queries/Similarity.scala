@@ -980,7 +980,8 @@ object Similarity {
       .withColumn("rn", row_number().over(wSrc)).filter(col("rn") <= 2)
       .select(col("src"), col("dst"))
     // small edge list under a deep window+crossJoin plan: truncate so the
-    // per-hop joins stop re-walking the build lineage (DevSeeds rule)
+    // per-hop joins stop re-walking the build lineage (the seed-graph
+    // profile, OPTIMIZATION_r14.md)
     val edges = local.union(hub).distinct().localCheckpoint(true)
     val q = n.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("emb").as("qe"), col("nrm").as("qn"))
@@ -991,17 +992,16 @@ object Similarity {
   /** Shared greedy beam: `hops` rounds of expand-score-keep-8, then the
     * top-3 report (see [[annNswBeam]] scaladoc). `beam0` = (q_id, c_id)
     * entry rows. The plan is TRUNCATED between hops (eager
-    * localCheckpoint on the |queries|·8-row beam): DevNsw A/B-measured
-    * the chained 3-hop plan at 8.5-8.9 s cold / 2.5-3.1 s warm vs
-    * 2.7-2.8 / 2.0-2.3 s truncated at sf0.1 — the deep chained plan
-    * pays a whole-stage-codegen compile tax per hop level that the
-    * tiny checkpoint never recovers. `truncate = false` is the
-    * measurement twin.
+    * localCheckpoint on the |queries|·8-row beam): the NSW truncation
+    * A/B (OPTIMIZATION_r14.md) measured the chained 3-hop plan at
+    * 8.5-8.9 s cold / 2.5-3.1 s warm vs 2.7-2.8 / 2.0-2.3 s truncated at
+    * sf0.1 — the deep chained plan pays a whole-stage-codegen compile
+    * tax per hop level that the tiny checkpoint never recovers.
     */
   private[graft] def nswBeam(
       edges: DataFrame, q: DataFrame, c: DataFrame,
       beam0: DataFrame, hops: Int, simName: String,
-      truncate: Boolean = true, width: Int = 8): DataFrame = {
+      width: Int = 8): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val wQ = Window.partitionBy("q_id")
       .orderBy(round(col("sim"), 6).desc, col("c_id").asc)
@@ -1014,7 +1014,7 @@ object Similarity {
         .withColumn("sim", dotD(col("qe"), col("ce")) / (col("qn") * col("cn")))
         .withColumn("rn", row_number().over(wQ)).filter(col("rn") <= width)
         .select(col("q_id"), col("c_id"))
-      beam = if (truncate) next.localCheckpoint(true) else next
+      beam = next.localCheckpoint(true)
     }
     beam.join(c, "c_id").join(q, "q_id")
       .withColumn("sim", dotD(col("qe"), col("ce")) / (col("qn") * col("cn")))
@@ -1023,19 +1023,6 @@ object Similarity {
       .select(col("q_id"), col("rnk"), col("c_id"),
         round(col("sim"), 4).as(simName))
       .orderBy("q_id", "rnk")
-  }
-
-  /** Dev-only A/B twin of [[annNswBeam]] with the CHAINED (untruncated)
-    * hop plan — the pre-adoption shape, kept for re-measurement by
-    * [[graft.DevNsw]]; not registered. */
-  private[graft] def devNswBeamChained(s: SparkSession, dir: String): DataFrame = {
-    val (n, edges, q, c) = nswParts(s, dir)
-    val m2 = n.select(col("vec_id")).orderBy("vec_id").limit(2)
-      .agg(min("vec_id").as("m0"), max("vec_id").as("m1"))
-    val beam0 = q.select(col("q_id")).crossJoin(broadcast(m2))
-      .select(col("q_id"),
-        when(col("q_id") === col("m0"), col("m1")).otherwise(col("m0")).as("c_id"))
-    nswBeam(edges, q, c, beam0, hops = 3, simName = "cosine_nsw", truncate = false)
   }
 
   // ---- shared NSW oracle fragments (DuckDB side) ----
@@ -2244,8 +2231,8 @@ object Similarity {
     import org.apache.spark.sql.expressions.Window
     graft.expressions.DotProductLong.register(s)
     // codegen'd fused integer dot (identical result to the HOF fold —
-    // integer addition is associative; measured 4.3 s → see DevNsw-style
-    // note in the bench history for the interpreted-HOF tax)
+    // integer addition is associative; measured 4.3 s → see the
+    // interpreted-HOF record in OPTIMIZATION_r14.md "Retired dev mains")
     def dotq(a: String, b: String): String = s"graft_dot_long($a, $b)"
     val q = Tables.t(s, dir, "embeddings").select(col("vec_id"), col("label"),
       expr("transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 10000) AS BIGINT))").as("q"))
@@ -2264,7 +2251,7 @@ object Similarity {
       // eager localCheckpoint truncates the per-round plan: the chosen
       // row and the N-row coverage state are tiny, and the chained
       // lineage otherwise pays a fresh whole-stage-codegen compile per
-      // round (the DevNsw-measured tax)
+      // round (the tax the NSW truncation A/B measured)
       val chosen = gains.orderBy(col("obj").desc, col("c_id").asc).limit(1)
         .join(broadcast(cands), "c_id").localCheckpoint(true)
       picks = picks :+ chosen.select(lit(r.toLong).as("round"),
@@ -2552,7 +2539,7 @@ object Similarity {
         .select(col("q_id"), col("c_id"))
     }
     // tiny (30-row) multi-referenced relations under deep subtrees:
-    // truncate, don't persist (the DevNsw rule)
+    // truncate, don't persist (the NSW truncation rule)
     val exact = top3(qs.join(corpus, col("q_id") =!= col("c_id")))
       .localCheckpoint(true)
     val cent = p.select(col("label"), posexplode(col("pe")))

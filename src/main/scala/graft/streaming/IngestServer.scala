@@ -227,13 +227,7 @@ object IngestServer {
     val spool = args.lift(2).map(Path.of(_))
       .getOrElse(Files.createTempDirectory("graft_ingress_spool"))
     Files.createDirectories(spool)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[8]"))
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
-      .getOrCreate()
+    val spark = graft.GraftSession(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[8]"), 8)
     spark.sparkContext.setLogLevel("WARN")
     val spooler = new TcpSpooler(port, spool).start()
     println(s"[ingress] graphite TCP listening on ${spooler.boundPort}, spool=$spool -> $endpoint")

@@ -1145,4 +1145,37 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
   }
+
+  test("Scale.concurrently runs both thunks with the caller's current local properties") {
+    val sc = spark.sparkContext
+    def both() = Scale.concurrently(
+      sc.getLocalProperty("graft.probe"), sc.getLocalProperty("graft.probe"))
+    try {
+      sc.setLocalProperty("graft.probe", "1")
+      assert(both() == (("1", "1")))
+      sc.setLocalProperty("graft.probe", "2")
+      assert(both() == (("2", "2")), "a thunk saw a stale local property")
+    } finally sc.setLocalProperty("graft.probe", null)
+  }
+
+  test("self-join lint: a count cap under OR is not a cap boundary") {
+    spark.sparkContext.setLogLevel("ERROR")
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    import org.apache.spark.sql.expressions.Window
+    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val sh = graft.ops.Lsh.shingles(docs, "doc_id", "text", n = 3)
+      .withColumn("cnt", count(lit(1)).over(Window.partitionBy("sh")))
+    def flags(cond: Column): Int = {
+      val c = sh.filter(cond)
+      c.select(col("doc_id").as("d1"), col("sh"))
+        .join(c.select(col("doc_id").as("d2"), col("sh").as("sh2")),
+          col("sh") === col("sh2") && col("d1") < col("d2"))
+        .queryExecution.optimizedPlan
+        .collect { case j: Join if SelfJoinAudit.isUncapped(j) => j }.size
+    }
+    assert(flags(col("cnt") <= 50) == 0, "a top-level count cap must be a boundary")
+    assert(flags(col("cnt") <= 50 || col("doc_id") > 3) > 0,
+      "a self-join below `cnt <= k OR p` must flag: the OR branch passes hot keys uncapped")
+  }
 }
