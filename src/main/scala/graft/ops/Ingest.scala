@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.core.{Gts, GtsRow}
-import graft.parsers.{GraphiteParser, InfluxLineParser, OpenTsdbParser, PromProtoParser}
+import graft.parsers.{GraphiteParser, InfluxLineParser, OpenTsdbParser, PromProtoParser, PrompbParser}
 import org.apache.spark.sql.{DataFrame, Dataset}
 
 /** One facade over every wire protocol the engine ingests — the library
@@ -47,17 +47,30 @@ object Ingest {
   private def bad(err: String): Parsed =
     Parsed(None, None, None, None, None, None, None, None, Some(err))
 
-  private def emit(results: Iterator[(String, Either[String, Seq[Gts]])],
-      mode: String): Iterator[Parsed] =
-    results.flatMap {
-      case (_, Right(gs)) => gs.map(good)
-      case (raw, Left(err)) => mode.toUpperCase match {
-        case "FAILFAST" =>
-          throw new IllegalArgumentException(s"malformed input: $err in <$raw>")
-        case "DROPMALFORMED" => Nil
-        case _ => Seq(bad(err))
+  private val Modes = Seq("PERMISSIVE", "FAILFAST", "DROPMALFORMED")
+
+  /** Parse every record of `in` under `mode`, checked once here as the
+    * plan is built: a typo must fail the call, not quarantine the input.
+    * `raw` renders a record for the FAILFAST message only.
+    */
+  private def parse[T](in: Dataset[T], mode: String, raw: T => String)(
+      f: T => Either[String, Seq[Gts]]): DataFrame = {
+    val m = mode.toUpperCase
+    require(Modes.contains(m),
+      s"unknown parse mode '$mode': expected one of ${Modes.mkString(", ")}")
+    import in.sparkSession.implicits._
+    in.mapPartitions(_.flatMap { t =>
+      f(t) match {
+        case Right(gs) => gs.map(good)
+        case Left(err) if m == "FAILFAST" =>
+          throw new IllegalArgumentException(s"malformed input: $err in <${raw(t)}>")
+        case Left(_) if m == "DROPMALFORMED" => Nil
+        case Left(err) => Seq(bad(err))
       }
-    }
+    }).toDF()
+  }
+
+  private def prefix(body: Array[Byte]): String = new String(body.take(64), "UTF-8")
 
   /** Graphite plaintext lines (`path[;k=v...] value [ts]`).
     * `parseHierarchy` splits dotted paths into positional labels.
@@ -66,13 +79,9 @@ object Ingest {
       lines: Dataset[String],
       parseHierarchy: Boolean = false,
       nowMs: Long = 0L,
-      mode: String = "PERMISSIVE"): DataFrame = {
-    import lines.sparkSession.implicits._
-    lines.mapPartitions { it =>
-      emit(it.map(l => l -> GraphiteParser.parseLine(l, parseHierarchy, nowMs)
-        .map(Seq(_))), mode)
-    }.toDF()
-  }
+      mode: String = "PERMISSIVE"): DataFrame =
+    parse(lines, mode, identity[String])(
+      GraphiteParser.parseLine(_, parseHierarchy, nowMs).map(Seq(_)))
 
   /** InfluxDB line protocol; one line can fan out to several GTS (one
     * per field). `precision` ∈ n/u/ms/s (influxdb.go:25-28).
@@ -81,12 +90,8 @@ object Ingest {
       lines: Dataset[String],
       precision: String = "n",
       nowNs: Long = 0L,
-      mode: String = "PERMISSIVE"): DataFrame = {
-    import lines.sparkSession.implicits._
-    lines.mapPartitions { it =>
-      emit(it.map(l => l -> InfluxLineParser.parseLine(l, precision, nowNs)), mode)
-    }.toDF()
-  }
+      mode: String = "PERMISSIVE"): DataFrame =
+    parse(lines, mode, identity[String])(InfluxLineParser.parseLine(_, precision, nowNs))
 
   /** OpenTSDB JSON bodies (single object or array; junk skipped by the
     * sniffer).
@@ -94,12 +99,8 @@ object Ingest {
   def opentsdb(
       bodies: Dataset[String],
       nowUs: Long = 0L,
-      mode: String = "PERMISSIVE"): DataFrame = {
-    import bodies.sparkSession.implicits._
-    bodies.mapPartitions { it =>
-      emit(it.map(b => b -> OpenTsdbParser.parse(b, nowUs)), mode)
-    }.toDF()
-  }
+      mode: String = "PERMISSIVE"): DataFrame =
+    parse(bodies, mode, identity[String])(OpenTsdbParser.parse(_, nowUs))
 
   /** Prometheus exposition bodies with content negotiation: delimited
     * protobuf `MetricFamily` when the content type says so, text
@@ -110,13 +111,18 @@ object Ingest {
       bodies: Dataset[(Array[Byte], Option[String])],
       extraLabels: Map[String, String] = Map.empty,
       nowMs: Long = 0L,
-      mode: String = "PERMISSIVE"): DataFrame = {
-    import bodies.sparkSession.implicits._
-    bodies.mapPartitions { it =>
-      emit(it.map { case (body, ct) =>
-        new String(body.take(64), "UTF-8") ->
-          PromProtoParser.parseExposition(body, ct, extraLabels, nowMs)
-      }, mode)
-    }.toDF()
-  }
+      mode: String = "PERMISSIVE"): DataFrame =
+    parse(bodies, mode, (b: (Array[Byte], Option[String])) => prefix(b._1)) {
+      case (body, ct) => PromProtoParser.parseExposition(body, ct, extraLabels, nowMs)
+    }
+
+  /** Prometheus remote_write bodies: snappy-compressed protobuf
+    * `WriteRequest`s (prometheus_remote_write.go:20-50). A body whose
+    * snappy header claims more than `PrompbParser.MaxUncompressedBytes`
+    * is a parse error, caught before any allocation.
+    */
+  def promRemoteWrite(
+      bodies: Dataset[Array[Byte]],
+      mode: String = "PERMISSIVE"): DataFrame =
+    parse(bodies, mode, prefix)(PrompbParser.parseSnappyBody)
 }

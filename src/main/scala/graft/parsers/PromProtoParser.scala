@@ -1,6 +1,7 @@
 package graft.parsers
 
 import graft.core.{Gts, GtsValue}
+import graft.parsers.PrompbParser.Reader
 
 import scala.collection.mutable
 
@@ -102,48 +103,7 @@ object PromProtoParser {
       }
     }
 
-  // ---- decoding (PrompbParser wire primitives, local copy of Reader) ----
-
-  private final class Reader(buf: Array[Byte], var pos: Int, val end: Int) {
-    def hasMore: Boolean = pos < end
-    def varint(): Long = {
-      var shift = 0; var result = 0L
-      while (shift < 64) {
-        if (pos >= end) throw new IllegalArgumentException("truncated varint")
-        val b = buf(pos); pos += 1
-        result |= (b & 0x7FL) << shift
-        if ((b & 0x80) == 0) return result
-        shift += 7
-      }
-      throw new IllegalArgumentException("varint too long")
-    }
-    def fixed64(): Long = {
-      if (pos + 8 > end) throw new IllegalArgumentException("truncated fixed64")
-      var v = 0L; var i = 0
-      while (i < 8) { v |= (buf(pos + i) & 0xFFL) << (8 * i); i += 1 }
-      pos += 8; v
-    }
-    private def lengthPrefix(): Int = {
-      val len = varint()
-      if (len < 0 || len > end - pos) throw new IllegalArgumentException("bad field length")
-      len.toInt
-    }
-    def lengthDelimited(): Reader = {
-      val len = lengthPrefix(); val r = new Reader(buf, pos, pos + len); pos += len; r
-    }
-    def bytes(): String = {
-      val len = lengthPrefix(); val s = new String(buf, pos, len, "UTF-8"); pos += len; s
-    }
-    def skip(wireType: Int): Unit = wireType match {
-      case 0 => varint(): Unit
-      case 1 => fixed64(): Unit
-      case 2 => lengthDelimited(): Unit
-      case 5 =>
-        if (pos + 4 > end) throw new IllegalArgumentException("truncated fixed32")
-        pos += 4
-      case other => throw new IllegalArgumentException(s"unsupported wire type $other")
-    }
-  }
+  // ---- decoding (over PrompbParser's wire Reader) ----
 
   private def dbl(r: Reader): Double = java.lang.Double.longBitsToDouble(r.fixed64())
 

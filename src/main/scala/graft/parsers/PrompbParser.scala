@@ -23,7 +23,8 @@ object PrompbParser {
   final case class Sample(value: Double, timestampMs: Long)
   final case class TimeSeries(labels: Map[String, String], samples: Seq[Sample])
 
-  private final class Reader(buf: Array[Byte], var pos: Int, val end: Int) {
+  /** Protobuf wire reader over `buf[pos, end)`; PromProtoParser shares it. */
+  private[parsers] final class Reader(buf: Array[Byte], var pos: Int, val end: Int) {
     def hasMore: Boolean = pos < end
 
     def varint(): Long = {

@@ -1,89 +1,27 @@
 package graft.streaming
 
-import graft.core.{Gts, GtsRow, Sensision}
-import graft.parsers.GraphiteParser
+import graft.core.GtsRow
+import graft.ops.Ingest
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, StreamingQuery, Trigger}
-import org.apache.spark.util.LongAccumulator
-
-/** Observability counters for the ingest path — the Spark-native analog of
-  * the reference's ~20 Prometheus counters (SURVEY.md §2 A35:
-  * core/handler.go:69-108, catalyser/graphite.go:91-146): accumulators
-  * aggregate across executors and surface on the driver.
-  */
-final class IngestMetrics(spark: SparkSession) extends Serializable {
-  val datapoints: LongAccumulator = spark.sparkContext.longAccumulator("graft.ingest.datapoints")
-  val parseErrors: LongAccumulator = spark.sparkContext.longAccumulator("graft.ingest.parse_errors")
-
-  /** Counters as a one-row DataFrame (the harness-facing `metrics` table). */
-  def toDF(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq((datapoints.value, parseErrors.value)).toDF("datapoints", "parse_errors")
-  }
-}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, StreamingQuery}
 
 /** Structured-Streaming ingest dataflow — the Spark-native form of the
   * reference's request→parse→encode→send pipeline (SURVEY.md §3.1-3.2):
   *
   *   source (file/socket/kafka lines)
-  *     → PERMISSIVE parse (errors dropped, mirroring the graphite TCP
-  *       skip-on-error policy, catalyser/graphite.go:276-283)
-  *     → event-time watermark + tumbling window aggregation
-  *     → foreachBatch Sensision sink (micro-batch replaces the per-line
-  *       io.Pipe streaming of core/warp.go:174,249-263; batch ids give
-  *       idempotent retry, unlike the reference's unbounded replay buffer
-  *       — SURVEY.md §2 gaps note).
+  *     → `ops.Ingest.graphite(…, mode = "DROPMALFORMED").as[GtsRow]`
+  *       (errors dropped, mirroring the graphite TCP skip-on-error
+  *       policy, catalyser/graphite.go:276-283)
+  *     → event-time watermark + tumbling window aggregation, or the
+  *       Warp sink (`TokenRoutedWarpWriter`, as `IngestServer.start`
+  *       wires it).
   *
   * The banned-token gate (middlewares/auth.go:30-53) is a broadcast-able
   * anti-join against a ban table — small state stays broadcast; if it
   * grows, promote to flatMapGroupsWithState keyed by token.
   */
 object GraphiteStream {
-
-  /** Parse a streaming (or batch) Dataset of graphite lines into GtsRow.
-    * PERMISSIVE: bad lines are dropped (FAILFAST mode is the HTTP-path
-    * policy, catalyser/graphite.go:49-56, and would `throw` instead).
-    */
-  def parseLines(spark: SparkSession, lines: Dataset[String], hierarchyLabels: Boolean): Dataset[GtsRow] = {
-    import spark.implicits._
-    lines.flatMap { line =>
-      GraphiteParser.parseLine(line, hierarchyLabels).toOption.map(Gts.toRow)
-    }
-  }
-
-  /** FAILFAST twin of parseLines — the HTTP-path policy
-    * (catalyser/graphite.go:49-56): the first bad line fails the
-    * task/request instead of being dropped (the TCP path keeps the
-    * PERMISSIVE drop; the `graphite_failfast` query derives both
-    * policies relationally).
-    */
-  def parseLinesFailfast(spark: SparkSession, lines: Dataset[String], hierarchyLabels: Boolean): Dataset[GtsRow] = {
-    import spark.implicits._
-    lines.map { line =>
-      GraphiteParser.parseLine(line, hierarchyLabels) match {
-        case Right(g)  => Gts.toRow(g)
-        case Left(err) => throw new IllegalArgumentException(s"graphite parse error: $err in <$line>")
-      }
-    }
-  }
-
-  /** parseLines with A35-style counters: successes and parse errors are
-    * counted on the executors via accumulators.
-    */
-  def parseLinesCounted(
-      spark: SparkSession,
-      lines: Dataset[String],
-      hierarchyLabels: Boolean,
-      metrics: IngestMetrics): Dataset[GtsRow] = {
-    import spark.implicits._
-    lines.flatMap { line =>
-      GraphiteParser.parseLine(line, hierarchyLabels) match {
-        case Right(g) => metrics.datapoints.add(1); Some(Gts.toRow(g))
-        case Left(_)  => metrics.parseErrors.add(1); None
-      }
-    }
-  }
 
   /** Custom keyed streaming state via mapGroupsWithState: running
     * datapoint count per metric name — the pattern the banned-token /
@@ -120,55 +58,9 @@ object GraphiteStream {
   def filterBanned(parsed: DataFrame, banned: DataFrame, tokenCol: String): DataFrame =
     parsed.join(broadcast(banned), parsed(tokenCol) === banned("token"), "left_anti")
 
-  /** Sensision encoding + delivery per micro-batch. `send` abstracts the
-    * Warp HTTP POST (core/warp.go:116-277) and runs PER PARTITION ON THE
-    * EXECUTORS (one connection per partition — the task-level analog of
-    * the reference's per-request sender goroutine, core/warp.go:183);
-    * batchId enables idempotent retry. Nothing is collected to the driver.
-    */
-  def sensisionSink(parsed: Dataset[GtsRow])(send: (Long, Iterator[String]) => Unit): DataStreamWriter[GtsRow] =
-    parsed.writeStream
-      .outputMode("append")
-      .trigger(Trigger.ProcessingTime("1 second"))
-      .foreachBatch { (batch: Dataset[GtsRow], batchId: Long) =>
-        import batch.sparkSession.implicits._
-        batch.map(r => Sensision.encode(r.toGts))
-          .foreachPartition { it: Iterator[String] => send(batchId, it) }
-      }
-
-  /** Snappy body decode (A5: the remote_write payload decompression,
-    * catalyser/prometheus_remote_write.go:29) — snappy-java ships with
-    * Spark; Kafka/parquet handle snappy natively, this is for raw HTTP
-    * bodies carried as binary columns. The claimed uncompressed length is
-    * validated BEFORE allocating (a crafted header can claim ~4 GB and
-    * snappy-java throws NegativeArraySizeException/OutOfMemoryError, not
-    * IOException); oversized or corrupt bodies are dropped, matching the
-    * PERMISSIVE bad-line policy of this path.
-    */
-  def snappyDecode(spark: SparkSession, bodies: Dataset[Array[Byte]]): Dataset[String] = {
-    import spark.implicits._
-    bodies.flatMap { b =>
-      try {
-        val len = org.xerial.snappy.Snappy.uncompressedLength(b)
-        if (len < 0 || len > graft.parsers.PrompbParser.MaxUncompressedBytes) None
-        else Some(new String(org.xerial.snappy.Snappy.uncompress(b), "UTF-8"))
-      } catch { case _: java.io.IOException => None }
-    }
-  }
-
-  /** Dry-run view (core/handler.go:161-167, --dryrun cmd/root.go:30): the
-    * decoded + re-encoded stream as Sensision lines, for a console sink or
-    * inspection instead of forwarding.
-    */
-  def dryRun(spark: SparkSession, parsed: Dataset[GtsRow]): Dataset[String] = {
-    import spark.implicits._
-    parsed.map(r => Sensision.encode(r.toGts))
-  }
-
   /** Convenience end-to-end: read text files appearing under `inputDir`,
     * parse, window, write counts to an in-memory table `queryName`.
-    */
-  /** `outputMode`: "append" (production shape — rows emit once the
+    * `outputMode`: "append" (production shape — rows emit once the
     * watermark passes the window end) or "complete" (all windows every
     * trigger — handy for tests/dashboards).
     */
@@ -181,7 +73,7 @@ object GraphiteStream {
       outputMode: String = "append"): StreamingQuery = {
     import spark.implicits._
     val lines = spark.readStream.text(inputDir).as[String]
-    val parsed = parseLines(spark, lines, hierarchyLabels = true)
+    val parsed = Ingest.graphite(lines, parseHierarchy = true, mode = "DROPMALFORMED").as[GtsRow]
     windowedCounts(parsed, window_, watermark)
       .writeStream.outputMode(outputMode).format("memory").queryName(queryName).start()
   }

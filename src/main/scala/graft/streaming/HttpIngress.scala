@@ -1,7 +1,7 @@
 package graft.streaming
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import graft.core.{GraftConfig, Gts, ReverseProxy, Sensision, TokenExtract, WarpError}
+import graft.core.{GraftConfig, Gts, ReverseProxy, Sensision, TokenExtract, Txn, WarpError}
 import graft.parsers.{GraphiteParser, InfluxLineParser, OpenTsdbParser, PromParser, PromProtoParser, PrompbParser}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -144,11 +144,7 @@ final class HttpIngress(
 
     // logger middleware start (logger.go:56-65): txn = sha256 of
     // XFF + lowercase-hex start nanos, echoed as X-App-Txn
-    val txn = {
-      val d = java.security.MessageDigest.getInstance("SHA-256")
-      val seed = header("X-Forwarded-For").getOrElse("") + java.lang.Long.toHexString(startNs)
-      d.digest(seed.getBytes(StandardCharsets.UTF_8)).map(b => f"${b & 0xFF}%02x").mkString
-    }
+    val txn = Txn.id(header("X-Forwarded-For").getOrElse("") + java.lang.Long.toHexString(startNs))
     resp.set("X-App-Txn", txn)
 
     val uri = ex.getRequestURI
@@ -184,10 +180,11 @@ final class HttpIngress(
           resolve(path) match {
             case NotFound => finish(404)
             case Ping =>
-              // A33 (catalyser/influxdb.go:53-57)
-              val ping = ProtocolIngest.influxPing(txn)
-              ping.headers.foreach { case (k, v) => resp.set(k, v) }
-              finish(ping.status)
+              // A33 (catalyser/influxdb.go:17-18,53-57): the supported
+              // protocol version and the request's txn echoed back
+              resp.set("X-Influxdb-Version", "1.4.x")
+              resp.set("Request-Id", txn)
+              finish(204)
             case Proxy(cfg, wild) =>
               val headers = {
                 val b = Seq.newBuilder[(String, String)]

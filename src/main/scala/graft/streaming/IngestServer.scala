@@ -1,8 +1,8 @@
 package graft.streaming
 
-import graft.core.{Gts, GtsRow, Sensision}
+import graft.core.{Gts, GtsRow, Txn}
 import graft.parsers.GraphiteParser
-import org.apache.spark.sql.{DataFrame, Dataset, ForeachWriter, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 import java.net.{ServerSocket, Socket, SocketException}
 import java.nio.charset.StandardCharsets
@@ -82,11 +82,7 @@ final class TcpSpooler(port: Int, spoolDir: Path) {
     */
   private def handleConnection(conn: Socket): Unit = {
     reqTcp.incrementAndGet()
-    val txn = {
-      val d = java.security.MessageDigest.getInstance("SHA-256")
-      d.digest(s"conn-${connIds.incrementAndGet()}".getBytes(StandardCharsets.UTF_8))
-        .map(b => f"${b & 0xFF}%02x").mkString
-    }
+    val txn = Txn.id(s"conn-${connIds.incrementAndGet()}")
     try {
       val in = new java.io.BufferedReader(
         new java.io.InputStreamReader(conn.getInputStream, StandardCharsets.UTF_8))
@@ -124,58 +120,6 @@ final class TcpSpooler(port: Int, spoolDir: Path) {
     } finally {
       try conn.close() catch { case _: Throwable => () }
     }
-  }
-}
-
-/** A sink writer that routes rows to one transport PER TOKEN within a
-  * partition (the reference opens one Warp client per connection;
-  * after the engine repartitions by data, tokens interleave). Sink
-  * failures feed the ban store, so a backend `invalid token` answer
-  * bans the token for the configured window — the A28 lifecycle.
-  */
-final class TokenRoutedWarpWriter(
-    newTransport: () => WarpTransport,
-    bans: BanStore) extends ForeachWriter[TokenizedGts] {
-
-  @transient private var open_ : java.util.HashMap[String, WarpTransport] = _
-  @transient private var txnSuffix: String = _
-
-  override def open(partitionId: Long, epochId: Long): Boolean = {
-    open_ = new java.util.HashMap[String, WarpTransport]()
-    txnSuffix = s"$partitionId-$epochId"
-    true
-  }
-
-  override def process(r: TokenizedGts): Unit = {
-    if (!bans.isBanned(r.token, System.currentTimeMillis())) {
-      var t = open_.get(r.token)
-      if (t == null) {
-        t = newTransport()
-        t.open(r.token, s"${r.txn}-$txnSuffix")
-        open_.put(r.token, t)
-      }
-      t.send(Sensision.encode(r.row.toGts))
-    }
-  }
-
-  override def close(errorOrNull: Throwable): Unit = {
-    val it = open_.entrySet().iterator()
-    if (errorOrNull != null) {
-      // failed task: abort every channel so no backend commits a
-      // partial batch the retried task will re-deliver
-      while (it.hasNext) { val e = it.next(); try e.getValue.abort() catch { case _: Throwable => () } }
-      return
-    }
-    var firstErr: Option[WarpSinkException] = None
-    while (it.hasNext) {
-      val e = it.next()
-      e.getValue.close().foreach { body =>
-        val cls = TokenBans.recordSinkFailure(
-          bans, body, e.getKey, System.currentTimeMillis())
-        if (firstErr.isEmpty) firstErr = Some(new WarpSinkException(cls))
-      }
-    }
-    firstErr.foreach(throw _)
   }
 }
 

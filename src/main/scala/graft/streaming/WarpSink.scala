@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.core.{GtsRow, Sensision, WarpError}
+import graft.core.{Sensision, WarpError}
 import org.apache.spark.sql.ForeachWriter
 
 /** Transport abstraction under the Warp sink — the reference's streaming
@@ -92,38 +92,61 @@ final class HttpWarpTransport(
   }
 }
 
-/** Streaming sink writer: GtsRow → Sensision bytes → transport, with the
-  * backend's error body classified through the ordered taxonomy
-  * (core/warp.go:280-421). Errors surface as WarpSinkException carrying
-  * the mapped HTTP status — Structured Streaming retries the task, and
-  * the reference's one-shot replay buffer (core/warp.go:180,260 — see
-  * SURVEY.md §2 gaps: don't copy) is replaced by idempotent task retry.
+/** The streaming Warp sink: TokenizedGts → Sensision bytes → one
+  * transport PER TOKEN within a partition (the reference opens one Warp
+  * client per connection; after the engine repartitions by data, tokens
+  * interleave). The backend's error body is classified through the
+  * ordered taxonomy (core/warp.go:280-421) and surfaces as a
+  * WarpSinkException carrying the mapped HTTP status; the failure also
+  * feeds the ban store, so a backend `invalid token` answer bans the
+  * token for the configured window — the A28 lifecycle. Structured
+  * Streaming retries a failed task, and the reference's one-shot replay
+  * buffer (core/warp.go:180,260 — see SURVEY.md §2 gaps: don't copy) is
+  * replaced by that idempotent retry over aborted channels.
   */
-final class WarpForeachWriter(
-    transport: WarpTransport,
-    token: String) extends ForeachWriter[GtsRow] {
+final class TokenRoutedWarpWriter(
+    newTransport: () => WarpTransport,
+    bans: BanStore) extends ForeachWriter[TokenizedGts] {
+
+  @transient private var open_ : java.util.HashMap[String, WarpTransport] = _
+  @transient private var txnSuffix: String = _
 
   override def open(partitionId: Long, epochId: Long): Boolean = {
-    transport.open(token, s"$partitionId-$epochId")
+    open_ = new java.util.HashMap[String, WarpTransport]()
+    txnSuffix = s"$partitionId-$epochId"
     true
   }
 
-  override def process(row: GtsRow): Unit =
-    transport.send(Sensision.encode(row.toGts))
+  override def process(r: TokenizedGts): Unit = {
+    if (!bans.isBanned(r.token, System.currentTimeMillis())) {
+      var t = open_.get(r.token)
+      if (t == null) {
+        t = newTransport()
+        t.open(r.token, s"${r.txn}-$txnSuffix")
+        open_.put(r.token, t)
+      }
+      t.send(Sensision.encode(r.row.toGts))
+    }
+  }
 
   override def close(errorOrNull: Throwable): Unit = {
+    val it = open_.entrySet().iterator()
     if (errorOrNull != null) {
-      // the task already failed: ABORT, never close — closing would
-      // complete the chunked POST and the backend would commit this
-      // partial batch beside the retried task's full one
-      try transport.abort() catch { case _: Throwable => () }
+      // failed task: abort every channel so no backend commits a
+      // partial batch the retried task will re-deliver
+      while (it.hasNext) { val e = it.next(); try e.getValue.abort() catch { case _: Throwable => () } }
       return
     }
-    val errBody = transport.close()
-    errBody.foreach { body =>
-      val cls = WarpError.classify(body, token)
-      throw new WarpSinkException(cls)
+    var firstErr: Option[WarpSinkException] = None
+    while (it.hasNext) {
+      val e = it.next()
+      e.getValue.close().foreach { body =>
+        val cls = TokenBans.recordSinkFailure(
+          bans, body, e.getKey, System.currentTimeMillis())
+        if (firstErr.isEmpty) firstErr = Some(new WarpSinkException(cls))
+      }
     }
+    firstErr.foreach(throw _)
   }
 }
 

@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.{GraftConfig, Sensision}
+import graft.core.{GraftConfig, Sensision, Txn}
 import graft.parsers.{GraphiteParser, InfluxLineParser}
 import graft.streaming.{BanStore, HttpIngress, WarpTransport}
 import org.scalatest.funsuite.AnyFunSuite
@@ -173,6 +173,29 @@ class HttpIngressSpec extends AnyFunSuite {
       assert(st == 204)
       assert(hs("x-influxdb-version") == "1.4.x")
       assert(hs("request-id") == hs("x-app-txn"))
+    }
+  }
+
+  test("dry-run: an influx body answers 200 and never opens a Warp transport (handler.go:165-170)") {
+    val opened = new java.util.concurrent.atomic.AtomicInteger
+    val ing = new HttpIngress(0, _ => { opened.incrementAndGet(); new Rec(None) },
+      new BanStore(60000L), config().copy(dryRun = true)).start()
+    try {
+      val (st, body, _) = req(ing.boundPort, "POST", "/influxdb/write", b("m v=1i 1434055562000000000"))
+      assert(st == 200 && body.isEmpty)
+      assert(opened.get() == 0)
+      assert(ing.accessLog.map(r => (r.status, r.datapoints)) == Seq((200, 0L)))
+    } finally ing.stop()
+  }
+
+  test("txn id: SHA-256 of the seed as 64 lowercase hex characters (logger.go:56-65)") {
+    assert(Txn.id("abc") == "ba7816bf8f01cfea414140de5dae2223b00361a396177a9cb410ff61f20015ad")
+    assert(Txn.id("") == "e3b0c44298fc1c149afbf4c8996fb92427ae41e4649b934ca495991b7852b855")
+    // the per-byte %02x rendering the helper replaced, on seeds of both call shapes
+    for (seed <- Seq("conn-1", "10.0.0.1" + java.lang.Long.toHexString(123456789L), "é")) {
+      val d = java.security.MessageDigest.getInstance("SHA-256")
+        .digest(seed.getBytes(StandardCharsets.UTF_8))
+      assert(Txn.id(seed) == d.map(b => f"${b & 0xFF}%02x").mkString)
     }
   }
 

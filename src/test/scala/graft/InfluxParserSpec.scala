@@ -118,11 +118,4 @@ class InfluxParserSpec extends AnyFunSuite {
     assert(ok.exists(_.size == 2))
     assert(InfluxLineParser.parsePayload("m v=1 1\nbadline\n", "n", nowNs).isLeft)
   }
-
-  test("A33 influx ping: 204, version header, txn echoed (influxdb.go:53-57)") {
-    val r = graft.streaming.ProtocolIngest.influxPing("txn-abc123")
-    assert(r.status == 204)
-    assert(r.headers("X-Influxdb-Version") == "1.4.x")
-    assert(r.headers("Request-Id") == "txn-abc123")
-  }
 }

@@ -319,6 +319,22 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(p.count() == 1 && p.head.getAs[String]("name") == "reqs")
   }
 
+  test("Ingest rejects an unknown parse mode as the plan is built, before any job runs") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    sc.setJobGroup("graft-mode-check", "unknown parse mode")
+    val e = try intercept[IllegalArgumentException] {
+      graft.ops.Ingest.graphite(Seq("garbage").toDS(), mode = "FAILFST")
+    } finally sc.clearJobGroup()
+    assert(e.getMessage.contains("FAILFST") &&
+      Seq("PERMISSIVE", "FAILFAST", "DROPMALFORMED").forall(e.getMessage.contains))
+    intercept[IllegalArgumentException](
+      graft.ops.Ingest.promRemoteWrite(Seq(Array[Byte](1)).toDS(), mode = "drop"))
+    assert(sc.statusTracker.getJobIdsForGroup("graft-mode-check").isEmpty)
+    // mode names stay case-insensitive
+    assert(graft.ops.Ingest.graphite(Seq("garbage").toDS(), mode = "dropmalformed").count() == 0)
+  }
+
   test("Graph.pagerank matches a sequential fixed-point reference, any partitioning") {
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._

@@ -87,17 +87,14 @@ class PrompbParserSpec extends AnyFunSuite {
     assert(PrompbParser.parseWriteRequest(out.toByteArray).isLeft)
   }
 
-  test("ProtocolIngest.promRemoteWrite over binary bodies (Spark path)") {
-    val spark = org.apache.spark.sql.SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false").getOrCreate()
+  test("Ingest.promRemoteWrite over binary bodies (Spark path)") {
+    val spark = GraftSession("local[2]", 2)
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val compressed = org.xerial.snappy.Snappy.compress(writeRequest())
     val garbage = "junk".getBytes("UTF-8")
-    val rows = graft.streaming.ProtocolIngest.promRemoteWrite(
-      spark, Seq(compressed, garbage).toDS(),
-      graft.streaming.ParseMode.Permissive).collect() // permissive: garbage dropped
+    val rows = graft.ops.Ingest.promRemoteWrite(Seq(compressed, garbage).toDS(),
+      mode = "DROPMALFORMED").as[graft.core.GtsRow].collect() // garbage dropped
     assert(rows.length == 3 && rows.forall(_.name == "up"))
   }
 

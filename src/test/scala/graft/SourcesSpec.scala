@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
 /** Source-format breadth: JSON with PERMISSIVE corrupt-record capture
-  * (the source-level twin of ProtocolIngest's parse modes), FAILFAST
+  * (the source-level twin of `ops.Ingest`'s parse modes), FAILFAST
   * rejection, and CSV with an explicit schema.
   */
 class SourcesSpec extends AnyFunSuite with BeforeAndAfterAll {

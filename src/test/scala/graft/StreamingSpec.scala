@@ -1,7 +1,8 @@
 package graft
 
+import graft.core.GtsRow
 import graft.streaming.GraphiteStream
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
@@ -39,9 +40,10 @@ object StreamingSpec {
     graft.streaming.ResumeCursorProcessor.expand(l.trim.toLong)
 }
 
-/** End-to-end Structured Streaming slice: file source → graphite parse →
-  * watermark + tumbling window → memory sink; and the Sensision
-  * foreachBatch sink capturing encoded lines per partition on executors.
+/** End-to-end Structured Streaming slice: file source → `ops.Ingest`
+  * parse → watermark + tumbling window → memory sink, plus the stateful
+  * processors' batch-parity checks. The Warp sink itself is covered by
+  * WarpSinkSpec and IngestServerSpec.
   */
 class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -54,6 +56,12 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     .getOrCreate()
 
   override def afterAll(): Unit = spark.stop()
+
+  /** Graphite lines -> GTS rows, bad lines dropped (the TCP policy). */
+  private def graphite(lines: Dataset[String]): Dataset[GtsRow] = {
+    import spark.implicits._
+    graft.ops.Ingest.graphite(lines, mode = "DROPMALFORMED").as[GtsRow]
+  }
 
   test("file source -> parse -> windowed counts in memory sink") {
     spark.sparkContext.setLogLevel("ERROR")
@@ -81,27 +89,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally q.stop()
   }
 
-  test("sensision foreachBatch sink encodes per partition on executors") {
-    spark.sparkContext.setLogLevel("ERROR")
-    StreamingSpec.sent.clear()
-    val dir = Files.createTempDirectory("graft_stream_sink").toFile
-    Files.write(new java.io.File(dir, "b.txt").toPath,
-      "tcp_metric 14.2 1546420308000\nflag true 1546420308000".getBytes("UTF-8"))
-    import spark.implicits._
-    val lines = spark.readStream.text(dir.getAbsolutePath).as[String]
-    val parsed = GraphiteStream.parseLines(spark, lines, hierarchyLabels = false)
-    val q = GraphiteStream.sensisionSink(parsed) { (_, it) =>
-      it.foreach(StreamingSpec.sent.add)
-    }.start()
-    try {
-      q.processAllAvailable()
-      val got = StreamingSpec.sent.toArray(Array.empty[String]).toSet
-      assert(got == Set(
-        "1546420308000000// tcp_metric{} 14.200000\r\n",
-        "1546420308000000// flag{} T\r\n"))
-    } finally q.stop()
-  }
-
   test("watermark drops late data in append mode") {
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
@@ -112,7 +99,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
        "m1 2 1546425000")      // 10:30:00
         .getBytes("UTF-8"))
     val lines = spark.readStream.text(dir.getAbsolutePath).as[String]
-    val parsed = GraphiteStream.parseLines(spark, lines, hierarchyLabels = false)
+    val parsed = graphite(lines)
     val q = GraphiteStream.windowedCounts(parsed, "1 minute", "10 minutes")
       .writeStream.outputMode("append").format("memory").queryName("graft_late_counts").start()
     try {
@@ -135,14 +122,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally q.stop()
   }
 
-  test("dry-run view re-encodes the stream as Sensision lines (A31)") {
-    import spark.implicits._
-    val lines = Seq("tcp_metric 14.2 1546420308000").toDS()
-    val parsed = GraphiteStream.parseLines(spark, lines, hierarchyLabels = false)
-    val enc = GraphiteStream.dryRun(spark, parsed).collect()
-    assert(enc.toSeq == Seq("1546420308000000// tcp_metric{} 14.200000\r\n"))
-  }
-
   test("gzip-compressed line sources decompress transparently (A4 analog)") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_gz").toFile
@@ -151,29 +130,51 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     out.write("sys.cpu.user 0.5 1546420308\nsys.cpu.user 0.7 1546420309".getBytes("UTF-8"))
     out.close()
     val lines = spark.read.text(dir.getAbsolutePath).as[String]
-    val parsed = GraphiteStream.parseLines(spark, lines, hierarchyLabels = false)
+    val parsed = graphite(lines)
     assert(parsed.count() == 2)
     assert(parsed.collect().map(_.v_double.get).sorted.toSeq == Seq(0.5, 0.7))
   }
 
   test("snappy-compressed bodies decode (A5: remote_write payloads)") {
     import spark.implicits._
-    val payload = "up{job=\"node\"} 1 1000"
-    val compressed = org.xerial.snappy.Snappy.compress(payload.getBytes("UTF-8"))
-    val decoded = GraphiteStream.snappyDecode(spark, Seq(compressed).toDS()).collect()
-    assert(decoded.toSeq == Seq(payload))
+    // one WriteRequest{TimeSeries{__name__=up, Sample{1.0 @ 1000 ms}}}
+    def ld(field: Int, body: Array[Byte]) = Array((field << 3 | 2).toByte, body.length.toByte) ++ body
+    val sample = Array[Byte](0x09) ++ java.nio.ByteBuffer.allocate(8)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN).putDouble(1.0).array() ++ Array[Byte](0x10, 0xE8.toByte, 0x07)
+    val series = ld(1, ld(1, "__name__".getBytes("UTF-8")) ++ ld(2, "up".getBytes("UTF-8"))) ++ ld(2, sample)
+    val body = org.xerial.snappy.Snappy.compress(ld(1, series))
+    // a snappy header claiming 2^32-1 bytes: refused before allocation
+    val huge = Array(0xFF, 0xFF, 0xFF, 0xFF, 0x0F, 0x00).map(_.toByte)
+    val rows = graft.ops.Ingest.promRemoteWrite(Seq(body, huge).toDS())
+      .select("name", "ts_us", "v_double", "error").collect()
+    val (good, bad) = rows.partition(_.isNullAt(3))
+    assert(good.map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSeq ==
+      Seq(("up", 1000000L, 1.0)))
+    assert(bad.length == 1 && bad.head.getString(3).contains("claimed uncompressed length"))
   }
 
-  test("ingest metrics accumulators count datapoints and parse errors (A35)") {
+  test("ingest metrics: observe counts datapoints and PERMISSIVE parse errors (A35)") {
+    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
-    val metrics = new graft.streaming.IngestMetrics(spark)
-    val lines = Seq("a 1 1546420308", "bad", "b 2.5 1546420308", "also_bad").toDS()
-    val parsed = GraphiteStream.parseLinesCounted(spark, lines, hierarchyLabels = false, metrics)
-    assert(parsed.count() == 2)
-    assert(metrics.datapoints.value == 2L)
-    assert(metrics.parseErrors.value == 2L)
-    val m = metrics.toDF(spark).collect().head
-    assert(m.getLong(0) == 2L && m.getLong(1) == 2L)
+    import org.apache.spark.sql.functions._
+    val dir = Files.createTempDirectory("graft_ingest_metrics").toFile
+    Files.write(new java.io.File(dir, "b.txt").toPath,
+      "a 1 1546420308\nbad\nb 2.5 1546420308\nalso_bad".getBytes("UTF-8"))
+    val lines = spark.readStream.text(dir.getAbsolutePath).as[String]
+    val q = graft.ops.Ingest.graphite(lines)
+      .observe("graft_ingest",
+        count_if(col("error").isNull).as("datapoints"),
+        count_if(col("error").isNotNull).as("parse_errors"))
+      .writeStream.outputMode("append").format("memory")
+      .queryName("graft_ingest_metrics").start()
+    try {
+      q.processAllAvailable()
+      val m = q.recentProgress.flatMap(p =>
+        Option(p.observedMetrics.get("graft_ingest"))).lastOption
+      assert(m.isDefined, "no observed metrics in progress")
+      assert(m.get.getAs[Long]("datapoints") == 2L)
+      assert(m.get.getAs[Long]("parse_errors") == 2L)
+    } finally q.stop()
   }
 
   test("mapGroupsWithState running counts accumulate across micro-batches") {
@@ -183,7 +184,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     Files.write(new java.io.File(dir, "b1.txt").toPath,
       "m1 1 1546420308\nm1 2 1546420309\nm2 3 1546420310".getBytes("UTF-8"))
     val lines = spark.readStream.text(dir.getAbsolutePath).as[String]
-    val parsed = GraphiteStream.parseLines(spark, lines, hierarchyLabels = false)
+    val parsed = graphite(lines)
     val counts = GraphiteStream.runningCountsByName(spark, parsed)
     val q = counts.toDF("name", "n").writeStream
       .outputMode("update").format("memory").queryName("graft_state_counts").start()
@@ -207,7 +208,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     Files.write(new java.io.File(dir, "b1.txt").toPath,
       "m1 1 1546420308\nm1 1 1546420308\nm2 2 1546420309".getBytes("UTF-8"))
     val lines = spark.readStream.text(dir.getAbsolutePath).as[String]
-    val parsed = GraphiteStream.parseLines(spark, lines, hierarchyLabels = false)
+    val parsed = graphite(lines)
       .dropDuplicates("name", "ts_us") // exactly-once per (series, timestamp)
     val q = parsed.toDF().writeStream
       .outputMode("append").format("memory").queryName("graft_dedup_out").start()
@@ -235,8 +236,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     Files.write(new java.io.File(dirB, "b.txt").toPath,
       "sys.cpu 2.0 1546420310\nsys.cpu 9.9 1546429999".getBytes("UTF-8"))
     def side(dir: java.io.File, prefix: String) = {
-      val parsed = GraphiteStream.parseLines(spark,
-        spark.readStream.text(dir.getAbsolutePath).as[String], hierarchyLabels = false)
+      val parsed = graphite(spark.readStream.text(dir.getAbsolutePath).as[String])
       parsed.toDF()
         .select(col("name").as(s"${prefix}_name"),
           timestamp_micros(col("ts_us")).as(s"${prefix}_time"),
@@ -266,7 +266,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     StreamingSpec.sent.clear()
     def start() = {
       val lines = spark.readStream.text(dir.getAbsolutePath).as[String]
-      val parsed = GraphiteStream.parseLines(spark, lines, hierarchyLabels = false)
+      val parsed = graphite(lines)
       GraphiteStream.runningCountsByName(spark, parsed).toDF("name", "n")
         .writeStream.outputMode("update")
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
@@ -299,7 +299,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       ("m1 1 1546420300\nm1 2 1546420320\nm1 3 1546420340\n" +
        "m1 9 1546421000").getBytes("UTF-8"))
     val lines = spark.readStream.text(dir.getAbsolutePath).as[String]
-    val parsed = GraphiteStream.parseLines(spark, lines, hierarchyLabels = false)
+    val parsed = graphite(lines)
     val q = parsed.toDF()
       .withColumn("event_time", timestamp_micros(col("ts_us")))
       .withWatermark("event_time", "10 minutes")
@@ -322,9 +322,8 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dirI = Files.createTempDirectory("graft_influx_s").toFile
     Files.write(new java.io.File(dirI, "b.txt").toPath,
       "cpu,host=a usage=0.5,active=3i 1546420308000000000".getBytes("UTF-8"))
-    val qi = graft.streaming.ProtocolIngest.influx(spark,
-        spark.readStream.text(dirI.getAbsolutePath).as[String], "n")
-      .toDF().writeStream.outputMode("append").format("memory")
+    val qi = graft.ops.Ingest.influx(spark.readStream.text(dirI.getAbsolutePath).as[String])
+      .writeStream.outputMode("append").format("memory")
       .queryName("graft_influx_stream").start()
     try {
       qi.processAllAvailable()
@@ -336,9 +335,8 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dirO = Files.createTempDirectory("graft_otsdb_s").toFile
     Files.write(new java.io.File(dirO, "b.txt").toPath,
       """{"metric":"sys.mem","timestamp":1546420308,"value":7,"tags":{"h":"x"}}""".getBytes("UTF-8"))
-    val qo = graft.streaming.ProtocolIngest.opentsdb(spark,
-        spark.readStream.text(dirO.getAbsolutePath).as[String])
-      .toDF().writeStream.outputMode("append").format("memory")
+    val qo = graft.ops.Ingest.opentsdb(spark.readStream.text(dirO.getAbsolutePath).as[String])
+      .writeStream.outputMode("append").format("memory")
       .queryName("graft_otsdb_stream").start()
     try {
       qo.processAllAvailable()
@@ -392,7 +390,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     Files.write(new java.io.File(dir, "b1.txt").toPath,
       "m1 1.5 1546420308\nm1 9.5 1546420309\nm2 2 1546420310".getBytes("UTF-8"))
     val lines = spark.readStream.text(dir.getAbsolutePath).as[String]
-    val parsed = GraphiteStream.parseLines(spark, lines, hierarchyLabels = false)
+    val parsed = graphite(lines)
     val q = graft.streaming.SeriesStatsProcessor(spark, parsed)
       .toDF("name", "n", "mx")
       .writeStream.outputMode("update").format("memory")
@@ -431,7 +429,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val lines = spark.readStream
       .format("socket").option("host", "127.0.0.1").option("port", port)
       .load().as[String]
-    val parsed = GraphiteStream.parseLines(spark, lines, hierarchyLabels = false)
+    val parsed = graphite(lines)
     val q = parsed.toDF().writeStream.outputMode("append")
       .format("memory").queryName("graft_socket_out").start()
     try {
@@ -456,7 +454,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     Files.write(new java.io.File(dir, "b1.txt").toPath,
       "m1 1 1546420308\nm1 1 1546420308\nm2 2 1546420309".getBytes("UTF-8"))
     val lines = spark.readStream.text(dir.getAbsolutePath).as[String]
-    val parsed = GraphiteStream.parseLines(spark, lines, hierarchyLabels = false)
+    val parsed = graphite(lines)
       .toDF()
       .withColumn("event_time", timestamp_micros(col("ts_us")))
       .withWatermark("event_time", "10 minutes")
@@ -481,7 +479,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     Files.write(new java.io.File(dir, "b.txt").toPath,
       "m1 1.5 1546420308\nm2 2.5 1546420309".getBytes("UTF-8"))
     val lines = spark.readStream.text(dir.getAbsolutePath).as[String]
-    val parsed = GraphiteStream.parseLines(spark, lines, hierarchyLabels = false)
+    val parsed = graphite(lines)
       .toDF()
       .observe("graft_ingest", count(lit(1)).as("rows"), sum("v_double").as("sum_v"))
     val q = parsed.writeStream.outputMode("append")
@@ -564,19 +562,21 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val lines = Seq("a.b 1 1546420308", "not!parseable", "c.d 2 1546420309").toDS()
-    assert(GraphiteStream.parseLines(spark, lines, hierarchyLabels = false).count() == 2)
+    assert(graphite(lines).count() == 2)
+    // PERMISSIVE keeps the bad line out of the good rows as one error row
+    assert(graft.ops.Ingest.graphite(lines).filter("error IS NOT NULL").count() == 1)
     val ex = intercept[Exception] {
-      GraphiteStream.parseLinesFailfast(spark, lines, hierarchyLabels = false).count()
+      graft.ops.Ingest.graphite(lines, mode = "FAILFAST").count()
     }
     def chain(t: Throwable): Seq[String] =
       Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(e => Option(e.getMessage).getOrElse("")).toSeq
-    assert(chain(ex).exists(_.contains("graphite parse error")), s"unexpected: $ex")
+    assert(chain(ex).exists(_.contains("malformed input: Bad metric format in <not!parseable>")),
+      s"unexpected: $ex")
   }
 
   test("negotiated prometheus exposition: proto and text bodies through one ingest (A17)") {
     import graft.parsers.PromProtoParser
     import graft.parsers.PromProtoParser.{Metric, MetricFamily}
-    import graft.streaming.ProtocolIngest
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val protoBody = PromProtoParser.encodeDelimited(Seq(
@@ -584,9 +584,9 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
         Seq(Metric(Map("k" -> "v"), Some(1.5), None, None, Some(10L))))))
     val textBody = "m_text{k=\"w\"} 2.5 20\n".getBytes("UTF-8")
     val ds = Seq(
-      (protoBody, PromProtoParser.ProtoContentType),
-      (textBody, "text/plain; version=0.0.4")).toDS()
-    val rows = ProtocolIngest.promExpositionNegotiated(spark, ds, Map("job" -> "j"))
+      (protoBody, Option(PromProtoParser.ProtoContentType)),
+      (textBody, Option("text/plain; version=0.0.4"))).toDS()
+    val rows = graft.ops.Ingest.promExposition(ds, Map("job" -> "j")).as[GtsRow]
       .collect().sortBy(_.name)
     assert(rows.map(_.name).toSeq == Seq("m_proto", "m_text"))
     assert(rows(0).labels == Map("k" -> "v", "job" -> "j"))
@@ -596,7 +596,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("prom-proto wire replay: delimited MetricFamily bodies stream across micro-batches") {
     import graft.parsers.PromProtoParser
     import graft.parsers.PromProtoParser.{Bucket, Metric, MetricFamily}
-    import graft.streaming.ProtocolIngest
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_promproto").toFile
@@ -616,8 +615,8 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
         Seq(Metric(Map("area" -> "heap"), Some(1048576.0), None, None, Some(30L))))))
     Files.write(new java.io.File(dir, "b1.txt").toPath, body1.getBytes("UTF-8"))
     val src = spark.readStream.text(dir.getAbsolutePath).as[String]
-      .map(l => (java.util.Base64.getDecoder.decode(l), PromProtoParser.ProtoContentType))
-    val q = ProtocolIngest.promExpositionNegotiated(spark, src, Map("job" -> "replay"))
+      .map(l => (java.util.Base64.getDecoder.decode(l), Option(PromProtoParser.ProtoContentType)))
+    val q = graft.ops.Ingest.promExposition(src, Map("job" -> "replay")).as[GtsRow]
       .map(g => (g.name, g.labels.toSeq.sorted.map(kv => kv._1 + "=" + kv._2).mkString(","),
         g.ts_us.getOrElse(-1L), g.v_double.getOrElse(Double.NaN)))
       .toDF("name", "labels", "ts_us", "v")

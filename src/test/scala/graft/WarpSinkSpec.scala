@@ -2,7 +2,8 @@ package graft
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import graft.core.{Gts, GtsValue, WarpError}
-import graft.streaming.{HttpWarpTransport, ProtocolIngest, ParseMode, WarpForeachWriter, WarpSinkException}
+import graft.ops.Ingest
+import graft.streaming.{BanStore, HttpWarpTransport, IngestServer, TokenRoutedWarpWriter, TokenizedGts, WarpSinkException}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -10,152 +11,172 @@ import java.net.InetSocketAddress
 import java.util.concurrent.ConcurrentLinkedQueue
 
 /** The Warp HTTP sink against a REAL local HTTP server: headers, the #\r\n
-  * prelude, streamed Sensision body, and error-body classification.
+  * prelude, streamed Sensision body, and error-body classification, all
+  * through the production writer (`TokenRoutedWarpWriter`).
   */
 class WarpSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private val received = new ConcurrentLinkedQueue[(String, String, String)]() // (token, txn, body)
+  private val received = new ConcurrentLinkedQueue[(String, String, String, String)]() // (token, txn, now, body)
   @volatile private var respondWith: (Int, String) = (200, "OK")
   private var server: HttpServer = _
   private var port: Int = _
+  // one thread per exchange, as a real backend: the writer holds one open
+  // POST per token and closes them in turn, so a server that reads one
+  // body at a time would wait on a channel the writer closes later
+  private val pool = java.util.concurrent.Executors.newCachedThreadPool()
 
   override def beforeAll(): Unit = {
     server = HttpServer.create(new InetSocketAddress(0), 0)
     server.createContext("/api/v0/update", new HttpHandler {
       override def handle(ex: HttpExchange): Unit = {
         val body = new String(ex.getRequestBody.readAllBytes(), "UTF-8")
-        received.add((ex.getRequestHeaders.getFirst("X-warp10-token"),
-          ex.getRequestHeaders.getFirst("Txn"), body))
+        val h = ex.getRequestHeaders
+        received.add((h.getFirst("X-warp10-token"), h.getFirst("Txn"), h.getFirst("X-Warp10-Now"), body))
         val (code, resp) = respondWith
         ex.sendResponseHeaders(code, resp.getBytes("UTF-8").length)
         ex.getResponseBody.write(resp.getBytes("UTF-8"))
         ex.close()
       }
     })
+    server.setExecutor(pool)
     server.start()
     port = server.getAddress.getPort
   }
 
-  override def afterAll(): Unit = server.stop(0)
+  override def afterAll(): Unit = { server.stop(0); pool.shutdown() }
 
-  private def writer() = new WarpForeachWriter(
-    new HttpWarpTransport(s"http://127.0.0.1:$port/api/v0/update", "now"), "tok123")
+  private def url = s"http://127.0.0.1:$port/api/v0/update"
+
+  private def writer(bans: BanStore = new BanStore(60000L)) = {
+    val u = url
+    new TokenRoutedWarpWriter(() => new HttpWarpTransport(u, "now"), bans)
+  }
+
+  private def row(token: String, g: Gts) = TokenizedGts(token, "txn", Gts.toRow(g))
 
   test("open/process/close streams prelude + Sensision lines with headers") {
     respondWith = (200, "OK")
     received.clear()
     val w = writer()
     assert(w.open(0L, 1L))
-    w.process(Gts.toRow(Gts(Some(1546420308000000L), "tcp_metric", Map.empty, GtsValue.double(14.2))))
-    w.process(Gts.toRow(Gts(Some(1546420308000001L), "flag", Map("a" -> "b"), GtsValue.bool(true))))
+    w.process(row("tok123", Gts(Some(1546420308000000L), "tcp_metric", Map.empty, GtsValue.double(14.2))))
+    w.process(row("tok123", Gts(Some(1546420308000001L), "flag", Map("a" -> "b"), GtsValue.bool(true))))
     w.close(null)
-    val (token, txn, body) = received.poll()
-    assert(token == "tok123" && txn == "0-1")
+    val (token, txn, now, body) = received.poll()
+    assert(token == "tok123" && txn == "txn-0-1" && now == "now")
     assert(body ==
       "#\r\n" +
       "1546420308000000// tcp_metric{} 14.200000\r\n" +
       "1546420308000001// flag{a=b} T\r\n")
+    assert(received.isEmpty)
   }
 
   test("error body classified through the ordered taxonomy -> typed sink exception") {
     respondWith = (500, "io.warp10.script.WarpScriptException: Token Expired")
-    val w = writer()
+    val bans = new BanStore(60000L)
+    val w = writer(bans)
     w.open(1L, 2L)
-    w.process(Gts.toRow(Gts(Some(1L), "m", Map.empty, GtsValue.long(1))))
+    w.process(row("tok123", Gts(Some(1L), "m", Map.empty, GtsValue.long(1))))
     val e = intercept[WarpSinkException](w.close(null))
     assert(e.error == WarpError.ExpiredToken("tok123"))
     assert(e.error.httpStatus == 401 && e.error.bansToken)
+    assert(bans.isBanned("tok123", System.currentTimeMillis()))
     respondWith = (200, "OK")
   }
 
   test("mid-batch transport death -> task retry -> backend commits the batch exactly ONCE") {
     // the reference replays a buffered prefix once on connection error
     // (core/warp.go:197-217); this repo's documented stance is
-    // idempotent task retry over an ABORTED channel (WarpSink.scala).
-    // Prove it end-to-end: the first attempt dies after 2 of 3 sends,
-    // the writer aborts the chunked POST (server read truncates ->
-    // nothing committed), Spark retries the task, and the backend ends
-    // up with EXACTLY one committed body holding each row exactly once.
+    // idempotent task retry over ABORTED channels (WarpSink.scala).
+    // Prove it end-to-end on the served pipeline: one spool file holds
+    // lines for two tokens, so the first attempt has two channels open
+    // when it dies after 3 of 6 sends. The writer aborts both chunked
+    // POSTs (server reads truncate -> nothing committed), Spark retries
+    // the task, and the backend ends up with EXACTLY one committed body
+    // per token holding each of its rows exactly once.
     respondWith = (200, "OK")
     received.clear()
-    WarpSinkSpec.attempts.set(0)
+    WarpSinkSpec.sends.set(0)
+    WarpSinkSpec.attempts.clear()
     // a fresh session with task retries enabled (local-mode default is
     // maxFailures=1, which would kill the query on the first death)
     SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession).foreach(_.stop())
-    val spark = SparkSession.builder().master("local[2,4]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession("local[2,4]", 2)
     try {
       spark.sparkContext.setLogLevel("ERROR")
-      import spark.implicits._
-      val dir = java.nio.file.Files.createTempDirectory("graft_retry_in")
-      java.nio.file.Files.writeString(dir.resolve("batch.txt"),
-        "a.one 1 1546420308\na.two 2 1546420309\na.three 3 1546420310\n")
-      val lines = spark.readStream.text(dir.toString).as[String]
-      val rows = ProtocolIngest.graphite(spark, lines, hierarchyLabels = false)
-        .repartition(1) // one partition = one transport = deterministic death point
-      val q = rows.writeStream
-        .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("graft_retry_ck").toString)
-        .foreach(new WarpForeachWriter(
-          new FlakyTransport(s"http://127.0.0.1:$port/api/v0/update"), "tokR"))
-        .start()
+      val spool = java.nio.file.Files.createTempDirectory("graft_retry_in")
+      java.nio.file.Files.writeString(spool.resolve("conn.tsv"), Seq(
+        "tokA\tc1\ta.one 1 1546420308", "tokB\tc2\tb.one 1 1546420308",
+        "tokA\tc1\ta.two 2 1546420309", "tokB\tc2\tb.two 2 1546420309",
+        "tokA\tc1\ta.three 3 1546420310", "tokB\tc2\tb.three 3 1546420310")
+        .mkString("", "\n", "\n"))
+      val u = url
+      val q = IngestServer.start(spark, spool,
+        java.nio.file.Files.createTempDirectory("graft_retry_ck"),
+        () => new FlakyTransport(u), new BanStore(60000L))
       try q.processAllAvailable() finally q.stop()
-      assert(WarpSinkSpec.attempts.get() == 2, s"expected death+retry, attempts=${WarpSinkSpec.attempts.get()}")
-      val bodies = received.toArray.map(_.asInstanceOf[(String, String, String)])
-        .filter(_._1 == "tokR").map(_._3).toSeq
-      assert(bodies.size == 1, s"backend committed ${bodies.size} bodies: $bodies")
-      for (m <- Seq("a.one", "a.two", "a.three"))
-        assert(bodies.head.linesIterator.count(_.contains(m)) == 1,
-          s"row $m not exactly-once in: ${bodies.head}")
+      assert(WarpSinkSpec.attempts.size == 2,
+        s"expected death+retry, task attempts=${WarpSinkSpec.attempts}")
+      for ((tok, prefix) <- Seq("tokA" -> "a.", "tokB" -> "b.")) {
+        val bodies = received.toArray.map(_.asInstanceOf[(String, String, String, String)])
+          .filter(_._1 == tok).map(_._4).toSeq
+        assert(bodies.size == 1, s"backend committed ${bodies.size} bodies for $tok: $bodies")
+        for (m <- Seq("one", "two", "three"))
+          assert(bodies.head.linesIterator.count(_.contains(s" $prefix$m{")) == 1,
+            s"row $prefix$m not exactly-once in: ${bodies.head}")
+      }
     } finally spark.stop()
   }
 
   test("parse modes: permissive drops, failfast throws (per-transport policy)") {
     SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession).foreach(_.stop())
-    val spark = SparkSession.builder().master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession("local[2]", 2)
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val lines = Seq("ok 1 1546420308", "definitely not parseable").toDS()
-    assert(ProtocolIngest.graphite(spark, lines, hierarchyLabels = false).count() == 1)
-    val ff = ProtocolIngest.graphite(spark, lines, hierarchyLabels = false, ParseMode.FailFast)
+    // TCP policy: the bad line vanishes; PERMISSIVE quarantines it as an
+    // error row beside the one good row
+    assert(Ingest.graphite(lines, mode = "DROPMALFORMED").count() == 1)
+    val permissive = Ingest.graphite(lines)
+    assert(permissive.filter("error IS NULL").count() == 1 &&
+      permissive.filter("error LIKE 'Bad metric%'").count() == 1)
+    // HTTP policy: the first bad line fails the job
+    val ff = Ingest.graphite(lines, mode = "FAILFAST")
     val err = intercept[org.apache.spark.SparkException](ff.count())
     assert(err.getMessage.contains("Bad metric") ||
       Option(err.getCause).exists(_.getMessage.contains("Bad metric")))
-    // influx + opentsdb + prom wrappers smoke
-    assert(ProtocolIngest.influx(spark, Seq("m v=1i 1000").toDS(), "n").count() == 1)
-    assert(ProtocolIngest.opentsdb(spark,
+    // influx + opentsdb + prom entries smoke
+    assert(Ingest.influx(Seq("m v=1i 1000").toDS()).count() == 1)
+    assert(Ingest.opentsdb(
       Seq("""{"metric":"m","timestamp":1,"value":2,"tags":{}}""").toDS()).count() == 1)
-    assert(ProtocolIngest.promExposition(spark,
-      Seq("m{a=\"b\"} 1 1000").toDS(), Map("job" -> "j")).count() == 1)
+    assert(Ingest.promExposition(Seq(("m{a=\"b\"} 1 1000".getBytes("UTF-8"), Option.empty[String])).toDS(),
+      Map("job" -> "j")).count() == 1)
   }
 }
 
 object WarpSinkSpec {
-  /** Attempt counter for the retry test (static: local-mode tasks share
-    * the JVM with the suite).
+  /** Sends across the query and the task attempts that made them
+    * (static: local-mode tasks share the JVM with the suite).
     */
-  val attempts = new java.util.concurrent.atomic.AtomicInteger(0)
+  val sends = new java.util.concurrent.atomic.AtomicInteger(0)
+  val attempts = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
 }
 
-/** Real HTTP transport whose FIRST attempt dies after the second send —
-  * the mid-batch connection loss the retry test injects.
+/** Real HTTP transport whose FIRST task attempt dies on the third send
+  * across all of its channels — the mid-batch connection loss the retry
+  * test injects.
   */
 final class FlakyTransport(endpoint: String) extends graft.streaming.WarpTransport {
-  private val inner = new graft.streaming.HttpWarpTransport(endpoint)
+  private val inner = new graft.streaming.HttpWarpTransport(endpoint, readTimeoutMs = 20000)
   @transient private var attempt: Int = _
-  @transient private var sent: Int = _
   override def open(token: String, txn: String): Unit = {
-    attempt = WarpSinkSpec.attempts.incrementAndGet()
-    sent = 0
+    attempt = org.apache.spark.TaskContext.get().attemptNumber()
+    WarpSinkSpec.attempts.add(attempt)
     inner.open(token, txn)
   }
   override def send(line: String): Unit = {
     inner.send(line)
-    sent += 1
-    if (attempt == 1 && sent == 2)
+    if (attempt == 0 && WarpSinkSpec.sends.incrementAndGet() == 3)
       throw new java.io.IOException("injected transport death mid-batch")
   }
   override def abort(): Unit = inner.abort()
