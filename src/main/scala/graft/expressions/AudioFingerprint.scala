@@ -2,7 +2,7 @@ package graft.expressions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.types._
 
 /** 64-bit audio fingerprint over a REAL decoded PCM stream, as a
@@ -49,7 +49,7 @@ case class AudioFingerprint(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-object AudioFingerprint {
+object AudioFingerprint extends NativeFunction {
   private final val NSamples = 65
 
   @inline private def u8(b: Array[Byte], i: Int): Int = b(i) & 0xFF
@@ -76,10 +76,5 @@ object AudioFingerprint {
   }
 
   val fnName = "audio_fingerprint"
-  val info = new ExpressionInfo(classOf[AudioFingerprint].getName, fnName)
   val builder: Seq[Expression] => Expression = exprs => AudioFingerprint(exprs.head)
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      fnName, builder, "built-in")
 }

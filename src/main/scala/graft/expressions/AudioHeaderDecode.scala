@@ -3,7 +3,7 @@ package graft.expressions
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -44,7 +44,7 @@ case class AudioHeaderDecode(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-object AudioHeaderDecode {
+object AudioHeaderDecode extends NativeFunction {
   val schema: StructType = StructType(Seq(
     StructField("format", StringType, nullable = false),
     StructField("channels", LongType, nullable = false),
@@ -79,10 +79,5 @@ object AudioHeaderDecode {
   }
 
   val fnName = "audio_header_decode"
-  val info = new ExpressionInfo(classOf[AudioHeaderDecode].getName, fnName)
   val builder: Seq[Expression] => Expression = exprs => AudioHeaderDecode(exprs.head)
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      fnName, builder, "built-in")
 }

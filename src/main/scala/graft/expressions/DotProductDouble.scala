@@ -2,7 +2,7 @@ package graft.expressions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
@@ -86,16 +86,8 @@ case class DotProductDouble(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-object DotProductDouble {
+object DotProductDouble extends NativeFunction {
   val fnName = "graft_dot"
-  val info = new ExpressionInfo(classOf[DotProductDouble].getName, fnName)
   val builder: Seq[Expression] => Expression =
     exprs => DotProductDouble(exprs.head, exprs(1))
-
-  /** Imperative registration on an existing session (driver sessions are
-    * created without extensions configured).
-    */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      fnName, builder, "built-in")
 }

@@ -2,7 +2,7 @@ package graft.expressions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
@@ -83,13 +83,8 @@ case class DotProductLong(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-object DotProductLong {
+object DotProductLong extends NativeFunction {
   val fnName = "graft_dot_long"
-  val info = new ExpressionInfo(classOf[DotProductLong].getName, fnName)
   val builder: Seq[Expression] => Expression =
     exprs => DotProductLong(exprs.head, exprs(1))
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      fnName, builder, "built-in")
 }

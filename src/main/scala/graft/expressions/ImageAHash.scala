@@ -2,7 +2,7 @@ package graft.expressions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.types._
 
 /** 64-bit perceptual average-hash (aHash) over a REAL decoded BMP pixel
@@ -49,7 +49,7 @@ case class ImageAHash(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-object ImageAHash {
+object ImageAHash extends NativeFunction {
   private final val Dim = 8
 
   @inline private def u8(b: Array[Byte], i: Int): Int = b(i) & 0xFF
@@ -93,10 +93,5 @@ object ImageAHash {
   }
 
   val fnName = "image_ahash"
-  val info = new ExpressionInfo(classOf[ImageAHash].getName, fnName)
   val builder: Seq[Expression] => Expression = exprs => ImageAHash(exprs.head)
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      fnName, builder, "built-in")
 }

@@ -2,7 +2,7 @@ package graft.expressions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.types._
 
 /** 64-bit DCT perceptual hash (pHash) over the same REAL 8×8 24bpp BMP
@@ -59,7 +59,7 @@ case class ImageDctHash(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-object ImageDctHash {
+object ImageDctHash extends NativeFunction {
   private final val Dim = 8
   final val Scale = 10000L
 
@@ -136,10 +136,5 @@ object ImageDctHash {
   }
 
   val fnName = "image_dct_hash"
-  val info = new ExpressionInfo(classOf[ImageDctHash].getName, fnName)
   val builder: Seq[Expression] => Expression = exprs => ImageDctHash(exprs.head)
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      fnName, builder, "built-in")
 }

@@ -3,7 +3,7 @@ package graft.expressions
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -52,7 +52,7 @@ case class ImageHeaderDecode(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-object ImageHeaderDecode {
+object ImageHeaderDecode extends NativeFunction {
   val schema: StructType = StructType(Seq(
     StructField("format", StringType, nullable = false),
     StructField("width", LongType, nullable = false),
@@ -104,15 +104,5 @@ object ImageHeaderDecode {
   }
 
   val fnName = "image_header_decode"
-  val info = new ExpressionInfo(classOf[ImageHeaderDecode].getName, fnName)
   val builder: Seq[Expression] => Expression = exprs => ImageHeaderDecode(exprs.head)
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      fnName, builder, "built-in")
-
-  def registerActive(): Unit =
-    (org.apache.spark.sql.SparkSession.getActiveSession.toSeq ++
-      org.apache.spark.sql.SparkSession.getDefaultSession.toSeq)
-      .foreach(register)
 }

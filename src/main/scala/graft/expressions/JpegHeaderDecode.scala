@@ -3,7 +3,7 @@ package graft.expressions
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -47,7 +47,7 @@ case class JpegHeaderDecode(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-object JpegHeaderDecode {
+object JpegHeaderDecode extends NativeFunction {
   val schema: StructType = StructType(Seq(
     StructField("format", StringType, nullable = false),
     StructField("precision", LongType, nullable = false),
@@ -101,10 +101,5 @@ object JpegHeaderDecode {
   }
 
   val fnName = "jpeg_header_decode"
-  val info = new ExpressionInfo(classOf[JpegHeaderDecode].getName, fnName)
   val builder: Seq[Expression] => Expression = exprs => JpegHeaderDecode(exprs.head)
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      fnName, builder, "built-in")
 }

@@ -2,7 +2,7 @@ package graft.expressions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -38,9 +38,8 @@ case class Md5Hash60(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-object Md5Hash60 {
+object Md5Hash60 extends NativeFunction {
   val fnName = "graft_h60"
-  val info = new ExpressionInfo(classOf[Md5Hash60].getName, fnName)
   val builder: Seq[Expression] => Expression = exprs => Md5Hash60(exprs.head)
 
   private val digests = new ThreadLocal[java.security.MessageDigest] {
@@ -60,17 +59,4 @@ object Md5Hash60 {
     while (i < 7) { v = (v << 8) | (d(i) & 0xFFL); i += 1 }
     (v << 4) | ((d(7) >> 4) & 0xFL)
   }
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      fnName, builder, "built-in")
-
-  /** Register on whatever sessions exist (ops helpers emit SQL fragments
-    * that reference the function at analysis time — same pattern as
-    * ops/Text.nfc).
-    */
-  def registerActive(): Unit =
-    (org.apache.spark.sql.SparkSession.getActiveSession.toSeq ++
-      org.apache.spark.sql.SparkSession.getDefaultSession.toSeq)
-      .foreach(register)
 }

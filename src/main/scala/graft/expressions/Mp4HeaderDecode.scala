@@ -3,7 +3,7 @@ package graft.expressions
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -46,7 +46,7 @@ case class Mp4HeaderDecode(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-object Mp4HeaderDecode {
+object Mp4HeaderDecode extends NativeFunction {
   val schema: StructType = StructType(Seq(
     StructField("major_brand", StringType, nullable = false),
     StructField("n_skipped", LongType, nullable = false),
@@ -101,10 +101,5 @@ object Mp4HeaderDecode {
   }
 
   val fnName = "mp4_header_decode"
-  val info = new ExpressionInfo(classOf[Mp4HeaderDecode].getName, fnName)
   val builder: Seq[Expression] => Expression = exprs => Mp4HeaderDecode(exprs.head)
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      fnName, builder, "built-in")
 }

@@ -2,7 +2,7 @@ package graft.expressions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -36,7 +36,7 @@ case class NfcNormalize(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-object NfcNormalize {
+object NfcNormalize extends NativeFunction {
   /** Static entry point for generated code (scalac emits a static
     * forwarder on the companion class). Fast path: NFC says most
     * strings are already normalized — `isNormalized` is a cheap scan
@@ -47,10 +47,5 @@ object NfcNormalize {
     else java.text.Normalizer.normalize(s, java.text.Normalizer.Form.NFC)
 
   val fnName = "graft_nfc"
-  val info = new ExpressionInfo(classOf[NfcNormalize].getName, fnName)
   val builder: Seq[Expression] => Expression = exprs => NfcNormalize(exprs.head)
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      fnName, builder, "built-in")
 }

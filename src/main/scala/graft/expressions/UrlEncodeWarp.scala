@@ -1,11 +1,9 @@
 package graft.expressions
 
 import graft.core.Sensision
-import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -36,50 +34,7 @@ case class UrlEncodeWarp(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-object UrlEncodeWarp {
+object UrlEncodeWarp extends NativeFunction {
   val fnName = "url_encode_warp"
-  val info = new ExpressionInfo(classOf[UrlEncodeWarp].getName, fnName)
   val builder: Seq[Expression] => Expression = exprs => UrlEncodeWarp(exprs.head)
-
-  /** Imperative registration on an existing session (the driver creates
-    * sessions without extensions configured).
-    */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      fnName, builder, "built-in")
-}
-
-/** `spark.sql.extensions=graft.expressions.GraftExtensions` — the
-  * config-driven injection path for sessions we own: the native encoder
-  * function plus the opt-in global-window scale guard
-  * ([[graft.plans.GlobalWindowGuard]]).
-  */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((FunctionIdentifier(UrlEncodeWarp.fnName),
-      UrlEncodeWarp.info, UrlEncodeWarp.builder))
-    ext.injectFunction((FunctionIdentifier(DotProductDouble.fnName),
-      DotProductDouble.info, DotProductDouble.builder))
-    ext.injectFunction((FunctionIdentifier(NfcNormalize.fnName),
-      NfcNormalize.info, NfcNormalize.builder))
-    ext.injectFunction((FunctionIdentifier(Md5Hash60.fnName),
-      Md5Hash60.info, Md5Hash60.builder))
-    ext.injectFunction((FunctionIdentifier(ImageHeaderDecode.fnName),
-      ImageHeaderDecode.info, ImageHeaderDecode.builder))
-    ext.injectFunction((FunctionIdentifier(AudioHeaderDecode.fnName),
-      AudioHeaderDecode.info, AudioHeaderDecode.builder))
-    ext.injectFunction((FunctionIdentifier(ImageAHash.fnName),
-      ImageAHash.info, ImageAHash.builder))
-    ext.injectFunction((FunctionIdentifier(DotProductLong.fnName),
-      DotProductLong.info, DotProductLong.builder))
-    ext.injectFunction((FunctionIdentifier(AudioFingerprint.fnName),
-      AudioFingerprint.info, AudioFingerprint.builder))
-    ext.injectFunction((FunctionIdentifier(VideoHeaderDecode.fnName),
-      VideoHeaderDecode.info, VideoHeaderDecode.builder))
-    ext.injectPostHocResolutionRule(graft.plans.GlobalWindowGuard.apply)
-    ext.injectPlannerStrategy(_ => graft.plans.TopKPerGroupStrategy)
-    // row_number()<=k filters route to the bounded TopKPerGroup operator
-    // (default on; kill switch spark.graft.rewrite.topK=false)
-    ext.injectOptimizerRule(graft.plans.TopKRewrite.apply)
-  }
 }

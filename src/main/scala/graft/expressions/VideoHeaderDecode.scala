@@ -3,7 +3,7 @@ package graft.expressions
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -44,7 +44,7 @@ case class VideoHeaderDecode(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-object VideoHeaderDecode {
+object VideoHeaderDecode extends NativeFunction {
   val schema: StructType = StructType(Seq(
     StructField("format", StringType, nullable = false),
     StructField("usec_per_frame", LongType, nullable = false),
@@ -76,10 +76,5 @@ object VideoHeaderDecode {
   }
 
   val fnName = "video_header_decode"
-  val info = new ExpressionInfo(classOf[VideoHeaderDecode].getName, fnName)
   val builder: Seq[Expression] => Expression = exprs => VideoHeaderDecode(exprs.head)
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      fnName, builder, "built-in")
 }

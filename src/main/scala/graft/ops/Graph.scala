@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Distributed graph primitives for the dedup pipeline — generic over any
@@ -8,6 +8,16 @@ import org.apache.spark.sql.functions._
   * user points at their own near-dup pair output).
   */
 object Graph {
+
+  /** The per-round lineage break of the iterative operators: a RELIABLE
+    * checkpoint when `spark.graft.checkpointDir` is set (survives
+    * executor loss), executor-local otherwise.
+    */
+  private def lineageBreak(s: SparkSession): DataFrame => DataFrame = {
+    val ckDir = s.conf.getOption("spark.graft.checkpointDir")
+    ckDir.foreach(s.sparkContext.setCheckpointDir)
+    df => if (ckDir.isDefined) df.checkpoint(true) else df.localCheckpoint(true)
+  }
 
   /** Driver-side union-find for a COUNTED-small edge set — the adaptive
     * fast path of both components variants (the same class of move as
@@ -70,10 +80,7 @@ object Graph {
       maxIters: Int = 64,
       smallCutoff: Long = 200000L): DataFrame = {
     val s = edgeList.sparkSession
-    val ckDir = s.conf.getOption("spark.graft.checkpointDir")
-    ckDir.foreach(s.sparkContext.setCheckpointDir)
-    def break(df: DataFrame): DataFrame =
-      if (ckDir.isDefined) df.checkpoint(true) else df.localCheckpoint(true)
+    val break = lineageBreak(s)
 
     val fwd = edgeList.select(col(srcCol).as("src"), col(dstCol).as("dst"))
     val edges = fwd.union(fwd.select(col("dst"), col("src"))).persist()
@@ -151,10 +158,7 @@ object Graph {
       maxIters: Int = 48,
       smallCutoff: Long = 200000L): DataFrame = {
     val s = edgeList.sparkSession
-    val ckDir = s.conf.getOption("spark.graft.checkpointDir")
-    ckDir.foreach(s.sparkContext.setCheckpointDir)
-    def break(df: DataFrame): DataFrame =
-      if (ckDir.isDefined) df.checkpoint(true) else df.localCheckpoint(true)
+    val break = lineageBreak(s)
 
     // vertex universe BEFORE dropping self-loops — a (v,v) edge still
     // declares v a vertex (same contract as connectedComponents)
@@ -261,10 +265,7 @@ object Graph {
       smallCutoff: Long = 200000L): DataFrame = {
     require(iters >= 0 && dampingBp >= 0 && dampingBp <= 10000)
     val s = edgeList.sparkSession
-    val ckDir = s.conf.getOption("spark.graft.checkpointDir")
-    ckDir.foreach(s.sparkContext.setCheckpointDir)
-    def break(df: DataFrame): DataFrame =
-      if (ckDir.isDefined) df.checkpoint(true) else df.localCheckpoint(true)
+    val break = lineageBreak(s)
 
     // vertex keys keep their own type (string names, long ids — anything
     // joinable); only the weight must be integral
@@ -367,10 +368,7 @@ object Graph {
       smallCutoff: Long = 200000L): DataFrame = {
     require(iters >= 0 && dampingBp >= 0 && dampingBp <= 10000)
     val s = edgeList.sparkSession
-    val ckDir = s.conf.getOption("spark.graft.checkpointDir")
-    ckDir.foreach(s.sparkContext.setCheckpointDir)
-    def break(df: DataFrame): DataFrame =
-      if (ckDir.isDefined) df.checkpoint(true) else df.localCheckpoint(true)
+    val break = lineageBreak(s)
 
     val e = edgeList.select(col(srcCol).as("src"),
       col(dstCol).as("dst"), col(weightCol).cast("long").as("w"))
@@ -697,10 +695,7 @@ object Graph {
       smallCutoff: Long = 200000L): DataFrame = {
     require(maxDepth >= 0)
     val s = edgeList.sparkSession
-    val ckDir = s.conf.getOption("spark.graft.checkpointDir")
-    ckDir.foreach(s.sparkContext.setCheckpointDir)
-    def break(df: DataFrame): DataFrame =
-      if (ckDir.isDefined) df.checkpoint(true) else df.localCheckpoint(true)
+    val break = lineageBreak(s)
 
     val fwd = edgeList.select(col(srcCol).as("src"), col(dstCol).as("dst"))
     val edges = fwd.union(fwd.select(col("dst"), col("src"))).persist()
@@ -777,10 +772,7 @@ object Graph {
       maxIters: Int = 64,
       smallCutoff: Long = 200000L): DataFrame = {
     val s = edgeList.sparkSession
-    val ckDir = s.conf.getOption("spark.graft.checkpointDir")
-    ckDir.foreach(s.sparkContext.setCheckpointDir)
-    def break(df: DataFrame): DataFrame =
-      if (ckDir.isDefined) df.checkpoint(true) else df.localCheckpoint(true)
+    val break = lineageBreak(s)
 
     val fwd = edgeList.select(col(srcCol).as("src"), col(dstCol).as("dst"),
       col(wCol).cast("long").as("w"))
@@ -868,10 +860,7 @@ object Graph {
       smallCutoff: Long = 200000L): DataFrame = {
     require(iters >= 0)
     val s = edgeList.sparkSession
-    val ckDir = s.conf.getOption("spark.graft.checkpointDir")
-    ckDir.foreach(s.sparkContext.setCheckpointDir)
-    def break(df: DataFrame): DataFrame =
-      if (ckDir.isDefined) df.checkpoint(true) else df.localCheckpoint(true)
+    val break = lineageBreak(s)
     import org.apache.spark.sql.expressions.Window
 
     val fwd = edgeList.select(col(srcCol).as("src"), col(dstCol).as("dst"))
@@ -958,10 +947,7 @@ object Graph {
       smallCutoff: Long = 200000L): DataFrame = {
     require(iters >= 1 && scale >= 1)
     val s = edgeList.sparkSession
-    val ckDir = s.conf.getOption("spark.graft.checkpointDir")
-    ckDir.foreach(s.sparkContext.setCheckpointDir)
-    def break(df: DataFrame): DataFrame =
-      if (ckDir.isDefined) df.checkpoint(true) else df.localCheckpoint(true)
+    val break = lineageBreak(s)
 
     val e = edgeList.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .distinct().persist()
@@ -1066,10 +1052,7 @@ object Graph {
       smallCutoff: Long = 200000L): DataFrame = {
     require(k >= 1, "k >= 1")
     val s = edgeList.sparkSession
-    val ckDir = s.conf.getOption("spark.graft.checkpointDir")
-    ckDir.foreach(s.sparkContext.setCheckpointDir)
-    def break(df: DataFrame): DataFrame =
-      if (ckDir.isDefined) df.checkpoint(true) else df.localCheckpoint(true)
+    val break = lineageBreak(s)
 
     var e = break(edgeList.select(col("lo"), col("hi")))
     var prev = e.count()
@@ -1241,10 +1224,7 @@ object Graph {
       intTypes.contains(edgeList.schema(c).dataType)),
       "msfEdges needs integral src/dst/w (exact-math contract)")
     val s = edgeList.sparkSession
-    val ckDir = s.conf.getOption("spark.graft.checkpointDir")
-    ckDir.foreach(s.sparkContext.setCheckpointDir)
-    def break(df: DataFrame): DataFrame =
-      if (ckDir.isDefined) df.checkpoint(true) else df.localCheckpoint(true)
+    val break = lineageBreak(s)
 
     val und = break(edgeList
       .filter(col(srcCol) =!= col(dstCol))
@@ -1489,10 +1469,7 @@ object Graph {
       maxRounds: Int = 24,
       smallCutoff: Long = 200000L): (Seq[(Int, Long, Long, Long)], Boolean, Boolean) = {
     val s = edgeList.sparkSession
-    val ckDir = s.conf.getOption("spark.graft.checkpointDir")
-    ckDir.foreach(s.sparkContext.setCheckpointDir)
-    def break(df: DataFrame): DataFrame =
-      if (ckDir.isDefined) df.checkpoint(true) else df.localCheckpoint(true)
+    val break = lineageBreak(s)
 
     val und = edgeList
       .select(least(col(srcCol), col(dstCol)).as("a"),
@@ -1633,10 +1610,7 @@ object Graph {
       maxRounds: Int = 24,
       smallCutoff: Long = 200000L): (Seq[(Int, Long, Long, Long)], Boolean, Boolean) = {
     val s = edgeList.sparkSession
-    val ckDir = s.conf.getOption("spark.graft.checkpointDir")
-    ckDir.foreach(s.sparkContext.setCheckpointDir)
-    def break(df: DataFrame): DataFrame =
-      if (ckDir.isDefined) df.checkpoint(true) else df.localCheckpoint(true)
+    val break = lineageBreak(s)
 
     val und = edgeList
       .select(least(col(srcCol), col(dstCol)).as("a"),
@@ -1762,10 +1736,7 @@ object Graph {
       maxRounds: Int = 12,
       smallCutoff: Long = 200000L): (Seq[(Int, Long, Long)], Boolean) = {
     val s = edgeList.sparkSession
-    val ckDir = s.conf.getOption("spark.graft.checkpointDir")
-    ckDir.foreach(s.sparkContext.setCheckpointDir)
-    def break(df: DataFrame): DataFrame =
-      if (ckDir.isDefined) df.checkpoint(true) else df.localCheckpoint(true)
+    val break = lineageBreak(s)
 
     val und = edgeList
       .select(least(col(srcCol), col(dstCol)).as("a"),

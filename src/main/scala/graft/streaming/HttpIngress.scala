@@ -440,7 +440,8 @@ object HttpIngress {
     val endpoint = args.lift(1).getOrElse(config.warpEndpoint)
     val bans = new BanStore(config.bannishmentMs * 20) // ban TTL (see BanStore doc)
     val ingress = new HttpIngress(port,
-      now => new HttpWarpTransport(endpoint, now), bans, config,
+      now => new HttpWarpTransport(endpoint, now, config.dialTimeoutMs,
+        config.connectionTimeoutMs), bans, config,
       banSleepMs = config.bannishmentMs).start()
     println(s"[ingress] HTTP route table listening on ${ingress.boundPort} -> $endpoint")
     Thread.currentThread().join()

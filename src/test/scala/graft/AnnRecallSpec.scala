@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -31,11 +31,7 @@ class AnnRecallSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val dir = "/root/testdata/sf0.001"
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = GraftSession("local[4]", 4)
 
   override def afterAll(): Unit = spark.stop()
 
@@ -53,7 +49,6 @@ class AnnRecallSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("recall@3 floors hold for every ANN path; probe expansion monotone") {
-    spark.sparkContext.setLogLevel("ERROR")
     val ivf1 = recall(top3(graft.queries.Similarity.annIvfCentroids.fn(spark, dir)))
     val ivf2 = recall(top3(graft.queries.Similarity.annIvfNprobe.fn(spark, dir)))
     val lsh1 = recall(top3(graft.queries.Similarity.annLshRp.fn(spark, dir)))
@@ -79,7 +74,6 @@ class AnnRecallSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("planted-cluster recall: every graded tier >= 0.8, probe expansion monotone") {
-    spark.sparkContext.setLogLevel("ERROR")
     for (d <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")) {
       val rows = graft.queries.Similarity.annRecallEval.fn(spark, d)
         .collect().map(r => r.getString(0) -> r.getLong(3)).toMap
@@ -93,7 +87,6 @@ class AnnRecallSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("NSW beam search: full result set, no self-matches, beam stays graph-reachable") {
-    spark.sparkContext.setLogLevel("ERROR")
     // on isotropic synthetic vectors beam recall vs exact is coverage-
     // bounded (≈ visited fraction), so the structural contract is what
     // can be asserted: every query returns exactly k ranked rows, never

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -15,16 +14,11 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class CompactionPlanSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = GraftSession("local[4]", 4)
 
   override def afterAll(): Unit = spark.stop()
 
   test("n_bins <= ideal_bins and single-file overshoot on adversarial listings") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val T = 100L
     // partitions: p_tiny = 300 x 1-byte files; p_giant = one 1000-byte

@@ -1,7 +1,6 @@
 package graft
 
 import graft.expressions.DotProductDouble
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -13,11 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class DotProductDoubleSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = GraftSession("local[2]", 2)
 
   override def afterAll(): Unit = spark.stop()
 
@@ -28,8 +23,6 @@ class DotProductDoubleSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("bit-identical to the aggregate(zip_with) fold on random vectors") {
-    spark.sparkContext.setLogLevel("ERROR")
-    DotProductDouble.register(spark)
     import spark.implicits._
     val rnd = new scala.util.Random(31)
     val rows = Seq.fill(200)((
@@ -58,7 +51,6 @@ class DotProductDoubleSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("null element and length mismatch yield NULL (zip_with semantics)") {
-    DotProductDouble.register(spark)
     val r1 = spark.sql(
       "SELECT graft_dot(array(1.0d, CAST(NULL AS DOUBLE)), array(1.0d, 2.0d)) AS d").collect()
     assert(r1.head.isNullAt(0))
@@ -73,7 +65,6 @@ class DotProductDoubleSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("rejects non-double-array inputs at analysis") {
-    DotProductDouble.register(spark)
     val err = intercept[Exception] {
       spark.sql("SELECT graft_dot(array('a'), array('b'))").collect()
     }
@@ -83,8 +74,6 @@ class DotProductDoubleSpec extends AnyFunSuite with BeforeAndAfterAll {
   // ---- graft_dot_long: the fixed-point integer twin ----
 
   test("graft_dot_long equals the integer fold on random quantized vectors") {
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.expressions.DotProductLong.register(spark)
     import spark.implicits._
     val rnd = new scala.util.Random(47)
     val rows = Seq.fill(200)((
@@ -99,7 +88,6 @@ class DotProductDoubleSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("graft_dot_long: null element / length mismatch NULL; wrong types rejected") {
-    graft.expressions.DotProductLong.register(spark)
     val r1 = spark.sql(
       "SELECT graft_dot_long(array(1L, CAST(NULL AS BIGINT)), array(1L, 2L)) AS d").collect()
     assert(r1.head.isNullAt(0))
@@ -112,7 +100,6 @@ class DotProductDoubleSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("graft_dot_long runs inside whole-stage codegen") {
-    graft.expressions.DotProductLong.register(spark)
     import spark.implicits._
     val df = Seq((Seq(1L, 2L), Seq(3L, 4L))).toDF("a", "b").repartition(1)
       .selectExpr("graft_dot_long(a, b) AS d")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -19,17 +18,11 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class ForecastEnsembleSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+  private lazy val spark = GraftSession("local[4]", 4)
 
   override def afterAll(): Unit = spark.stop()
 
   test("ensemble loses to the worst member by at most 1; weights partition 10000") {
-    spark.sparkContext.setLogLevel("ERROR")
     for (dir <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")) {
       val rows = graft.queries.Series.tsForecastEnsemble.fn(spark, dir)
         .select("event_type", "w_naive_bp", "w_drift_bp", "w_mean_bp",

@@ -302,9 +302,7 @@ class HttpIngressSpec extends AnyFunSuite {
   test("access log as a DataFrame: 12 columns, queryable") {
     withIngress() { (ing, _) =>
       req(ing.boundPort, "POST", "/influxdb/write", b("m1 value=3i 1434055562"))
-      val spark = org.apache.spark.sql.SparkSession.builder()
-        .master("local[2]").config("spark.sql.shuffle.partitions", "2")
-        .config("spark.ui.enabled", "false").getOrCreate()
+      val spark = GraftSession("local[2]", 2)
       try {
         val df = ing.accessLogDf(spark)
         assert(df.columns.toSeq == Seq("remote", "host", "uri", "method", "path",

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -11,16 +10,11 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class ImageHeaderDecodeSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = GraftSession("local[2]", 2)
 
   override def afterAll(): Unit = spark.stop()
 
   private def decode(hex: String) = {
-    graft.expressions.ImageHeaderDecode.register(spark)
     import spark.implicits._
     Seq(hex).toDF("hx").repartition(1)
       .selectExpr("image_header_decode(unhex(hx)) AS m")
@@ -57,7 +51,6 @@ class ImageHeaderDecodeSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("garbage, truncated and null inputs decode to NULL (nullable honored)") {
-    graft.expressions.ImageHeaderDecode.register(spark)
     import spark.implicits._
     val rows = Seq(
       Some("FFD8FFE0"),          // JPEG magic — not a supported container
@@ -70,7 +63,6 @@ class ImageHeaderDecodeSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   private def decodeWav(hex: String) = {
-    graft.expressions.AudioHeaderDecode.register(spark)
     import spark.implicits._
     Seq(hex).toDF("hx").repartition(1)
       .selectExpr("audio_header_decode(unhex(hx)) AS m")
@@ -94,7 +86,6 @@ class ImageHeaderDecodeSpec extends AnyFunSuite with BeforeAndAfterAll {
     val m = decodeWav(mono)
     assert(m.getLong(1) == 1L && m.getLong(2) == 8000L && m.getLong(4) == 32L)
     // wrong WAVE magic / truncated -> NULL
-    graft.expressions.AudioHeaderDecode.register(spark)
     import spark.implicits._
     val bad = Seq("52494646" + "54000000" + "57415646" + hex.drop(24), "524946").toDF("hx")
       .repartition(1).selectExpr("audio_header_decode(unhex(hx)) AS m").collect()
@@ -102,7 +93,6 @@ class ImageHeaderDecodeSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   private def decodeAvi(hex: String) = {
-    graft.expressions.VideoHeaderDecode.register(spark)
     import spark.implicits._
     Seq(hex).toDF("hx").repartition(1)
       .selectExpr("video_header_decode(unhex(hx)) AS m")
@@ -122,7 +112,6 @@ class ImageHeaderDecodeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(r.getString(0) == "avi" && r.getLong(1) == 40000L && r.getLong(2) == 120L &&
       r.getLong(3) == 2L && r.getLong(4) == 640L && r.getLong(5) == 480L)
     // wrong form type (WAVE bytes), missing avih, truncated, zero µs -> NULL
-    graft.expressions.VideoHeaderDecode.register(spark)
     import spark.implicits._
     val bad = Seq(
       hex.patch(16, "57415645", 8),                 // 'WAVE' form
@@ -142,7 +131,6 @@ class ImageHeaderDecodeSpec extends AnyFunSuite with BeforeAndAfterAll {
     "00000000" + "C0000000" + "130B0000" + "130B0000" + "00000000" + "00000000"
 
   private def ahash(hex: String): Option[Long] = {
-    graft.expressions.ImageAHash.register(spark)
     import spark.implicits._
     val r = Seq(hex).toDF("hx").repartition(1)
       .selectExpr("image_ahash(unhex(hx)) AS a").collect()(0)
@@ -201,7 +189,6 @@ class ImageHeaderDecodeSpec extends AnyFunSuite with BeforeAndAfterAll {
   // ---- image_dct_hash over the same thumbnail container ----
 
   private def dctHash(hex: String): Option[Long] = {
-    graft.expressions.ImageDctHash.register(spark)
     import spark.implicits._
     val r = Seq(hex).toDF("hx").repartition(1)
       .selectExpr("image_dct_hash(unhex(hx)) AS a").collect()(0)
@@ -263,7 +250,6 @@ class ImageHeaderDecodeSpec extends AnyFunSuite with BeforeAndAfterAll {
     "0200" + "1000" + "64617461" + "82000000"
 
   private def afp(hex: String): Option[Long] = {
-    graft.expressions.AudioFingerprint.register(spark)
     import spark.implicits._
     val r = Seq(hex).toDF("hx").repartition(1)
       .selectExpr("audio_fingerprint(unhex(hx)) AS a").collect()(0)
@@ -294,7 +280,6 @@ class ImageHeaderDecodeSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("decoder runs inside whole-stage codegen (no interpreted fallback)") {
-    graft.expressions.ImageHeaderDecode.register(spark)
     import spark.implicits._
     val df = Seq("424D").toDF("hx").repartition(1)
       .selectExpr("image_header_decode(unhex(hx)) AS m")

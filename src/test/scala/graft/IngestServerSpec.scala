@@ -3,7 +3,6 @@ package graft
 import graft.parsers.GraphiteParser
 import graft.core.Sensision
 import graft.streaming.{BanStore, IngestServer, TcpSpooler, WarpTransport}
-import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import java.net.Socket
@@ -18,12 +17,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
   */
 class IngestServerSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+  private lazy val spark = GraftSession("local[2]", 2)
 
   override def afterAll(): Unit = spark.stop()
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,11 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class JpegHeaderDecodeSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = GraftSession("local[2]", 2)
 
   override def afterAll(): Unit = spark.stop()
 
@@ -26,7 +21,6 @@ class JpegHeaderDecodeSpec extends AnyFunSuite with BeforeAndAfterAll {
     marker + "0011" + "08" + "01E0" + "0280" + "03" + "012200" + "021101" + "031101"
 
   private def decode(hex: String): Option[(String, Long, Long, Long, Long, Long, Boolean)] = {
-    graft.expressions.JpegHeaderDecode.register(spark)
     import spark.implicits._
     val r = Seq(hex).toDF("hx").repartition(1)
       .selectExpr("jpeg_header_decode(unhex(hx)) AS m")

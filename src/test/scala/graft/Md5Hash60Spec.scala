@@ -1,7 +1,5 @@
 package graft
 
-import graft.expressions.Md5Hash60
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -13,17 +11,11 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class Md5Hash60Spec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = GraftSession("local[2]", 2)
 
   override def afterAll(): Unit = spark.stop()
 
   test("bit-identical to the conv/substr/md5 chain on random + edge strings") {
-    spark.sparkContext.setLogLevel("ERROR")
-    Md5Hash60.register(spark)
     import spark.implicits._
     val rnd = new scala.util.Random(47)
     val edge = Seq("", " ", "a", "0", "é æ 文字", "a b c", "\t\n",

@@ -2,7 +2,6 @@ package graft
 
 import graft.functions.MinHashAggregator
 import graft.queries.Dedup
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,21 +11,12 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class MinHashAggregatorSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+  private lazy val spark = GraftSession("local[4]", 4)
 
   override def afterAll(): Unit = spark.stop()
 
   test("udaf signatures == column-expression signatures on real documents") {
-    spark.sparkContext.setLogLevel("ERROR")
     spark.udf.register("minhash_sig", udaf(MinHashAggregator))
-    // hashExpr's registerActive() fires once at Dedup object init, which
-    // may happen under ANOTHER suite's session — register on ours
-    graft.expressions.Md5Hash60.register(spark)
     val sh = Dedup.sparkShingles(spark, "/root/testdata/sf0.001")
       .withColumn("hm", expr(Dedup.hashExpr))
     val viaUdaf = sh.groupBy("doc_id").agg(expr("minhash_sig(hm)").as("sig"))
@@ -41,7 +31,6 @@ class MinHashAggregatorSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("simhash udaf signatures == 32-sum expression signatures") {
-    spark.sparkContext.setLogLevel("ERROR")
     spark.udf.register("simhash_sig_t", udaf(graft.functions.SimHashAggregator))
     val sh = Dedup.sparkShingles(spark, "/root/testdata/sf0.001")
       .withColumn("h", expr("CAST(conv(substr(md5(sh), 1, 15), 16, 10) AS BIGINT)"))

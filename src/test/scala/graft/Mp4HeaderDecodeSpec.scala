@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,11 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class Mp4HeaderDecodeSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = GraftSession("local[2]", 2)
 
   override def afterAll(): Unit = spark.stop()
 
@@ -31,7 +26,6 @@ class Mp4HeaderDecodeSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def freeBox(n: Int) = f"${8 + n}%08X" + "66726565" + "00" * n
 
   private def decode(hex: String): Option[(String, Long, Boolean, Long, Long)] = {
-    graft.expressions.Mp4HeaderDecode.register(spark)
     import spark.implicits._
     val r = Seq(hex).toDF("hx").repartition(1)
       .selectExpr("mp4_header_decode(unhex(hx)) AS m")
@@ -72,7 +66,6 @@ class Mp4HeaderDecodeSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("Spark decoder == the oracle's unrolled hex walk on the synthetic corpus") {
     // both walks over the SAME builder hex, on a sample of doc ids that
     // covers every branch (brand rotation, free %4=3, skip %5=2)
-    graft.expressions.Mp4HeaderDecode.register(spark)
     import spark.implicits._
     val mh = graft.ops.Media.mp4HexExpr("doc_id", "blen")
     val docs = (0L until 60L).map(i => (i, 40L + i * 7 % 300)).toDF("doc_id", "blen")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -11,16 +10,11 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = GraftSession("local[4]", 4)
 
   override def afterAll(): Unit = spark.stop()
 
   test("Graph.connectedComponents labels chains, rings, and isolates-with-self-loops") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     // component {1,2,3,4} as a chain, ring {10,11,12}, self-loop {20}
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (11L, 12L),
@@ -80,7 +74,6 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("Graph.connectedComponentsStar agrees with propagation on chains, rings, and self-loops") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L), (11L, 12L),
       (12L, 10L), (20L, 20L)).toDF("src", "dst")
@@ -91,7 +84,6 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("Graph.connectedComponentsStar converges in O(log) rounds on a high-diameter chain") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     // a 512-long chain has diameter 511: min-label propagation would need
     // ~511 shuffle rounds (its maxIters guard would throw), star
@@ -105,7 +97,6 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("Graph.connectedComponentsStar matches brute-force union-find on random graphs") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val rnd = new scala.util.Random(29)
     for (trial <- 1 to 3) {
@@ -132,7 +123,6 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("Graph.msfEdges: loop == Kruskal fast path == Prim reference on random weighted graphs") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val rnd = new scala.util.Random(41)
     for (trial <- 1 to 3) {
@@ -177,7 +167,6 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("Graph.ssspFrom: loop == fast path == reference Dijkstra, zero weights included") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val rnd = new scala.util.Random(53)
     for (trial <- 1 to 3) {
@@ -229,7 +218,6 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("Sample.ppsSystematic: hits telescope to n; heavy rows carry multiplicity; partitioning-stable") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val df = (1L to 100L).map(i => (i, if (i == 7) 500L else 5L)).toDF("id", "w")
       .repartition(5)
@@ -244,7 +232,6 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("Sample.stratifiedTopN takes exactly min(n, stratum size) rows, stable across partitionings") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val df = (0L until 100L).map(i => (i, s"s${i % 3}")).toDF("id", "src")
     val a = graft.ops.Sample.stratifiedTopN(df, "src", "id", 10)
@@ -260,7 +247,6 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("Sample.budgetCap admits in hash order and overshoots by at most one row per stratum") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val df = (0L until 60L).map(i => (i, s"s${i % 2}", 10L + (i % 7))).toDF("id", "src", "w")
     val budget = 100L
@@ -284,7 +270,6 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("Ingest facade: one relation shape across graphite/influx/opentsdb/prom-proto") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     // graphite: good line + bad line → PERMISSIVE keeps the error row
     val g = graft.ops.Ingest.graphite(
@@ -336,7 +321,6 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("Graph.pagerank matches a sequential fixed-point reference, any partitioning") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val edges = Seq( // small weighted digraph incl. a dangling sink (d) and a self-loop
       ("a", "b", 3L), ("a", "c", 1L), ("b", "c", 2L), ("c", "a", 1L),
@@ -371,7 +355,6 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("Text.winnowFingerprints: shared-run guarantee, short-doc empty, partition-stable") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val run = "alpha beta gamma delta epsilon zeta" // 6 words = win+k-1 guarantee length
     val docs = Seq(
@@ -396,14 +379,12 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("Graph.connectedComponents returns an empty relation on an empty edge list") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val empty = Seq.empty[(Long, Long)].toDF("src", "dst")
     assert(graft.ops.Graph.connectedComponents(empty).count() == 0)
   }
 
   test("Lsh.candidatePairs rejects band configs exceeding the signature width") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val sigs = Seq((1L, (1 to 16).map(_.toLong))).toDF("id", "sig")
     val err = intercept[IllegalArgumentException] {
@@ -413,7 +394,6 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("Ann.dot self-registers on an extension-less session with no prior registration") {
-    spark.sparkContext.setLogLevel("ERROR")
     // drop any registration left by other tests so this exercises the
     // standalone path a library user hits first
     spark.sessionState.functionRegistry.dropFunction(
@@ -427,7 +407,6 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("Graph.connectedComponents matches brute-force union-find on random graphs") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val rnd = new scala.util.Random(17)
     for (trial <- 1 to 3) {
@@ -455,7 +434,6 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("Pack.assignBins matches the sequential reference across shard/bin configs") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val rnd = new scala.util.Random(23)
     for ((shardSize, binTokens) <- Seq((7L, 64L), (100L, 512L), (1L, 10L))) {
@@ -471,7 +449,6 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("Pack.assignBins is bit-identical to a single global cumulative sum") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val rnd = new scala.util.Random(11)
     // ids straddle several shards at shardSize=16
@@ -488,7 +465,6 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("Lsh pipeline pairs near-duplicates and skips unrelated docs on synthetic text") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val base = (1 to 40).map(i => s"w$i").mkString(" ")
     val docs = Seq(
@@ -506,7 +482,6 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("Text primitives: tokens, fingerprint, quality, hash bucket on synthetic docs") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val docs = Seq(
       (1L, "The quick brown fox jumps over the lazy dog"),
@@ -529,7 +504,6 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("Ann.cosineTopK ranks an obvious nearest neighbor first") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val corpus = Seq(
       (1L, Seq(1.0, 0.0, 0.0)),
@@ -543,7 +517,6 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("Sketch.kmvSetOps: under-k sketches make every set estimate exact") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     // |A| = 30, |B| = 25, |A∩B| = 15 (keys 15..29), |A∪B| = 40 — all < k
     val a = (0 until 30).map(i => s"key$i").toDF("k0")
@@ -557,7 +530,6 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("Graph.bfsHops: min hops on a lollipop graph, frontier stops at maxDepth") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     // triangle {0,1,2} with a tail 2-3-4-5; seed at 0; 9 disconnected
     val edges = Seq((0L, 1L), (1L, 2L), (2L, 0L), (2L, 3L), (3L, 4L), (4L, 5L),
@@ -579,7 +551,6 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("Graph.labelPropagation: two cliques with a bridge settle to two communities") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     def clique(ids: Seq[Long]) =
       for (a <- ids; b <- ids if a < b) yield (a, b)
@@ -599,7 +570,6 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("Graph.hits: star hub out-scores its leaves; authorities mirror on reversal") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     // hub 0 points at leaves 1..4; one leaf also points back at 0
     val edges = Seq((0L, 1L), (0L, 2L), (0L, 3L), (0L, 4L), (1L, 0L))
@@ -622,7 +592,6 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("Graph fast paths: mixed Int/Long key widths match the distributed loops") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     // src typed INT, dst typed LONG: the distributed joins coerce, but a
     // driver HashMap on boxed values would never match Integer vs Long —
@@ -653,7 +622,6 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("chunk + temperatureAlloc invariants hold on seeded-random inputs") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val rnd = new scala.util.Random(404)
     // --- chunk: 150 random docs per (chunk, stride) config, ONE pass each
@@ -699,7 +667,6 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("Sample.temperatureAlloc: exact isqrt weights, allocation sums exactly to budget") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     // strata sized around perfect-square boundaries: 1, 4, 8, 9, 10000
     val rows = Seq("a" -> 1, "b" -> 4, "c" -> 8, "d" -> 9, "e" -> 10000)
@@ -724,7 +691,6 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("Text.chunk: exact-coverage boundaries, short tails, singleton docs") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     def toks(n: Int) = (1 to n).map(i => s"t$i")
     val docs = Seq(
@@ -754,7 +720,6 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("Text.chunkSentences: boundary grammar, greedy packing, over-budget sentences") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val docs = Seq(
       // 3 sentences of 3/4/2 tokens; budget 6 packs [3], [4+2]
@@ -793,7 +758,6 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("Graph.linkScores: distance-2 pairs only, exact RA arithmetic, adjacents excluded") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     // path 1-2-3-4 plus edge 1-3: candidate non-edges are (1,4) via m=3
     // and (2,4) via m=3; (1,3) is an EDGE so the m=2 wedge must not
@@ -816,7 +780,6 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("Sample.shardedRank == row_number per stratum, any shard size") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     // sparse non-contiguous ids, uneven strata, shard boundaries mid-stratum
     val rows = Seq((1L, "a"), (3L, "b"), (4L, "a"), (7L, "a"), (9L, "b"),
@@ -836,7 +799,6 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("Graph.linkScoresWeighted: Murata-Moriyasu wRA, parallel-edge collapse") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     // path 1-2-3-4 weighted: w(1,2)=3, w(2,3)=2, w(3,4)=5.
     // strength: 1→3, 2→5, 3→7, 4→5.
@@ -864,7 +826,6 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("Graph.personalizedPagerank: fast path == distributed loop; seed semantics") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     // chain 0->1->2->3 plus a back-edge; restart on seed {0}
     val edges = Seq((0L, 1L, 1L), (1L, 2L, 1L), (2L, 3L, 1L), (3L, 0L, 2L))
@@ -891,7 +852,6 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("Graph.pagerank: empty edge list and IntegerType weights on the fast path") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     // empty graph: both paths return an empty frame (the fast path used
     // to divide scale by |V| = 0)
@@ -910,7 +870,6 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("Ann.lazyGreedyCoreset == naive greedy in identical Long arithmetic, fewer full passes") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     // deterministic mixed-sign vectors; candidates = every 7th id
     val vecs: Seq[(Long, Array[Long])] = (1L to 40L).map { i =>

@@ -243,9 +243,7 @@ class ParserFuzzSpec extends AnyFunSuite {
 
   test("graphiteVtype column twin agrees with GraphiteParser.inferValue on adversarial tokens") {
     import graft.core.GtsValue
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]").config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false").appName("graft-vtype-agreement").getOrCreate()
+    val spark = GraftSession("local[2]", 2)
     try {
       import spark.implicits._
       // the drift cases the advisor flagged + Go-vs-Java float grammar edges

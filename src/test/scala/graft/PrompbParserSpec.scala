@@ -89,7 +89,6 @@ class PrompbParserSpec extends AnyFunSuite {
 
   test("Ingest.promRemoteWrite over binary bodies (Spark path)") {
     val spark = GraftSession("local[2]", 2)
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val compressed = org.xerial.snappy.Snappy.compress(writeRequest())
     val garbage = "junk".getBytes("UTF-8")

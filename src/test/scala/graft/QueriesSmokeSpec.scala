@@ -6,7 +6,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Every registered query runs against sf0.001 without throwing — the
   * sbt-test-level guard for the driver's Verify gate (full oracle parity
-  * is tools/check.py's job).
+  * is tools/check.py's job). The one suite on a plain session, without
+  * GraftExtensions: a harness may build its session that way, and only
+  * here must every query resolve through its own imperative `register` /
+  * `ensureStrategy` calls. Verify certifies the GraftSession plans.
   */
 class QueriesSmokeSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val sfDir = "/root/testdata/sf0.001"
@@ -21,7 +24,6 @@ class QueriesSmokeSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = spark.stop()
 
   test("entry returns rows on sf0.001 (driver smoke contract)") {
-    spark.sparkContext.setLogLevel("ERROR")
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
@@ -32,7 +34,6 @@ class QueriesSmokeSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
     test(s"query $name runs at sf0.001") {
-      spark.sparkContext.setLogLevel("ERROR")
       val n = fn(spark, sfDir).count()
       assert(n >= 0)
       spark.catalog.clearCache()
@@ -40,7 +41,6 @@ class QueriesSmokeSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("q_approx_distinct HLL estimates are within 5% of exact q_distinct") {
-    spark.sparkContext.setLogLevel("ERROR")
     // the query's own oracle only bounds at 15% (3× rsd); assert the
     // tighter documented envelope on the raw estimates here
     import org.apache.spark.sql.functions.{approx_count_distinct, col}
@@ -61,7 +61,6 @@ class QueriesSmokeSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("approx_percentile sketch is within 2% of the exact percentile") {
-    spark.sparkContext.setLogLevel("ERROR")
     // no cross-engine oracle for the sketch; verify against exact instead
     import org.apache.spark.sql.functions._
     val r = graft.Tables.t(spark, sfDir, "lineitem").agg(
@@ -75,7 +74,6 @@ class QueriesSmokeSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("dedup_clusters under RELIABLE checkpointing matches localCheckpoint results") {
-    spark.sparkContext.setLogLevel("ERROR")
     val base = SparkEntry.queries("dedup_clusters")(spark, sfDir).collect().toSeq
     val ckDir = java.nio.file.Files.createTempDirectory("graft_ck").toString
     spark.conf.set("spark.graft.checkpointDir", ckDir)

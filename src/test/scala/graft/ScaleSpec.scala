@@ -1,7 +1,6 @@
 package graft
 
 import graft.ops.Scale
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,27 +11,17 @@ import java.nio.file.Files
   */
 class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val warehouse = Files.createTempDirectory("graft_wh").toString
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir", warehouse)
-    .config("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ to expose shuffles
-    // INTENTIONAL divergence from Bench/Verify/Smoke: those sessions set
-    // spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold=64m, so a
-    // join pinned as SortMergeJoin here may EXECUTE as a shuffled-hash
-    // join under the driver (AQE rewrites at runtime when every
-    // post-shuffle partition is under the bound). The pins in this suite
-    // assert join KEYS / exchange structure / cap windows — properties
-    // the SMJ->SHJ swap preserves — and the swap itself is
-    // result-neutral (the full oracle gate runs under the 64m config).
-    .getOrCreate()
+  private lazy val spark = {
+    val s = GraftSession("local[4]", 4)
+    // no broadcast joins: the pins below read the shuffles of sort-merge
+    // joins, and AQE's 64m SMJ->SHJ rewrite keeps their keys and exchanges
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    s
+  }
 
   override def afterAll(): Unit = spark.stop()
 
   test("saltedAgg == direct groupBy agg under a hot key") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     // 90% of rows share one hot key
     val df = (1 to 10000).map(i => (if (i % 10 == 0) s"k${i % 7}" else "HOT", i.toDouble))
@@ -46,7 +35,6 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("saltedJoin == direct join under a hot key; shuffle keys widened by the salt") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     // 90% of big-side rows land on one hot key
     val big = (1 to 20000).map(i => (if (i % 10 == 0) i % 7 else 3, i.toLong))
@@ -76,7 +64,6 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("layout_zorder: interleaved bucket spans are bounded on BOTH keys (zone-map prunability)") {
-    spark.sparkContext.setLogLevel("ERROR")
     // 64 z-buckets fix the top 3 bits of EACH 10-bit dimension, so the
     // within-bucket span of either quantized key is at most 2^7 - 1 —
     // the invariant that makes min/max zone maps prune 2-predicate
@@ -92,7 +79,6 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("quality_repetition plans shuffle-free per-doc stats (no hash exchange)") {
-    spark.sparkContext.setLogLevel("ERROR")
     // the run-length-fold rewrite must keep per-doc repetition stats a
     // pure map-side computation: the ONLY exchange allowed is the final
     // presentation ORDER BY (range partitioning) — a hash exchange means
@@ -104,7 +90,6 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("text_bm25 top-20 plans as TakeOrderedAndProject, not a global sort") {
-    spark.sparkContext.setLogLevel("ERROR")
     val plan = graft.queries.TextOps.textBm25
       .fn(spark, "/root/testdata/sf0.001").queryExecution.executedPlan.toString
     assert(plan.contains("TakeOrderedAndProject"),
@@ -112,7 +97,6 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("stratified sample / budget cap plan per-stratum windows (no empty-frame global window)") {
-    spark.sparkContext.setLogLevel("ERROR")
     val p1 = graft.queries.TextOps.stratifiedSample
       .fn(spark, "/root/testdata/sf0.001").queryExecution.executedPlan.toString
     val p2 = graft.queries.TextOps.packTokenBudget
@@ -124,7 +108,6 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("runtime bloom filter from a filtered dim prunes the fact scan side") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     // at 100 TB the win: a selective dim filter becomes a bloom filter
     // APPLIED ON THE FACT SIDE before the shuffle — rows that can't join
@@ -158,7 +141,6 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("partitioned writes prune at the source (PartitionFilters)") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_part").toString
     (1 to 1000).map(i => (s"type${i % 5}", i.toLong, i * 1.5))
@@ -172,12 +154,14 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("bucketed co-located join is shuffle-free (SortMergeJoin, no Exchange)") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val facts = (1L to 5000L).map(i => (i % 100, s"f$i")).toDF("k", "payload")
     val dims = (0L until 100L).map(i => (i, s"d$i")).toDF("k", "attr")
-    facts.write.mode("overwrite").bucketBy(8, "k").sortBy("k").saveAsTable("graft_facts_b")
-    dims.write.mode("overwrite").bucketBy(8, "k").sortBy("k").saveAsTable("graft_dims_b")
+    val dir = Files.createTempDirectory("graft_bucketed").toString
+    facts.write.mode("overwrite").option("path", s"$dir/facts").bucketBy(8, "k").sortBy("k")
+      .saveAsTable("graft_facts_b")
+    dims.write.mode("overwrite").option("path", s"$dir/dims").bucketBy(8, "k").sortBy("k")
+      .saveAsTable("graft_dims_b")
     val joined = spark.table("graft_facts_b").join(spark.table("graft_dims_b"), "k")
     val plan = joined.queryExecution.executedPlan.toString
     assert(plan.contains("SortMergeJoin"), s"expected SMJ, got:\n$plan")
@@ -186,7 +170,6 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("sorted parquet layout skips row groups/files on a range predicate (zone maps)") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     // same 20k rows, two physical layouts split into 20 files each:
     // sorted by `v` (tight per-file min/max) vs round-robin (every file
@@ -216,7 +199,6 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("bucketized interval join plans as a hash/merge join, not a nested loop") {
-    spark.sparkContext.setLogLevel("ERROR")
     val plan = graft.queries.Analytics.qIntervalBucketJoin
       .fn(spark, "/root/testdata/sf0.001")
       .queryExecution.executedPlan.toString
@@ -228,7 +210,6 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("AQE splits a skewed join partition at runtime (skew=true in the final plan)") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     // one hot key owns ~200k rows; thresholds lowered so local-scale data
     // trips the same detector a 100 TB job relies on
@@ -261,7 +242,6 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("round-3 operators plan scale-shaped: top-k heaps, equi-joins only, one profiler scan") {
-    spark.sparkContext.setLogLevel("ERROR")
     val sf = "/root/testdata/sf0.001"
     // sample_priority: global top-k must be per-partition heaps + merge,
     // never a full sort
@@ -289,7 +269,6 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("round-5 operators plan scale-shaped: partitioned windows, broadcast models, equi-joins") {
-    spark.sparkContext.setLogLevel("ERROR")
     val sf = "/root/testdata/sf0.001"
     // q_asof_nearest: ONE partitioned window scan, no join, and no
     // single-partition global window
@@ -325,7 +304,6 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("round-4 operators plan scale-shaped: equi-joins, heap top-k, bounded windows") {
-    spark.sparkContext.setLogLevel("ERROR")
     val sf = "/root/testdata/sf0.001"
     // dedup_max_span: the gram-index self-join must stay equi-keyed on
     // the gram hash — a cartesian/BNLJ means the inverted-index keying
@@ -377,7 +355,6 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("round-5 additions plan scale-shaped: keyed joins, bounded broadcasts, no cartesians") {
-    spark.sparkContext.setLogLevel("ERROR")
     val sf = "/root/testdata/sf0.001"
     // pipeline_chunk_index: chunk explode + md5 dedup + packer — every
     // join keyed (chunk hash / shard), nothing all-pairs
@@ -408,7 +385,6 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("round-5 third-pass operators plan scale-shaped") {
-    spark.sparkContext.setLogLevel("ERROR")
     val sf = "/root/testdata/sf0.001"
     // weighted link prediction: wedge join keyed on the middle vertex,
     // strength join keyed, anti-join keyed — nothing all-pairs
@@ -449,7 +425,6 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("round-6 operators plan scale-shaped: banded phash join capped, keyed windows only") {
-    spark.sparkContext.setLogLevel("ERROR")
     val sf = "/root/testdata/sf0.001"
     // phash pair miner: candidates come from an EQUI-join on the band
     // key (pigeonhole), never an all-pairs product, and the band
@@ -486,7 +461,6 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("round-6 second-pass operators plan scale-shaped: broadcast dims, keyed windows, equi-joins") {
-    spark.sparkContext.setLogLevel("ERROR")
     val sf = "/root/testdata/sf0.001"
     def planOf(q: graft.Q): String = q.fn(spark, sf).queryExecution.executedPlan.toString
     // TPC-H star shapes: dimensions broadcast, fact scanned once, no
@@ -537,7 +511,6 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("capGroups bounds per-group pair blow-up; basket_pairs plans the cap window") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     // one pathological giant group (100 items) beside normal ones: the
     // cap must drop the giant ENTIRELY, so downstream self-join pair
@@ -566,7 +539,6 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("exact shingle pair-miners are df-capped: hot grams cannot emit df^2 pairs") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     // a boilerplate footer gram shared by every doc + one real dup pair:
     // the df cap must drop the hot gram entirely and keep the dup signal
@@ -600,7 +572,6 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("round-7 hashed-gram miners join on 8-byte long keys, never gram strings") {
-    spark.sparkContext.setLogLevel("ERROR")
     // gram strings must leave every dedup pipeline AT THE EXPLODE: the
     // exchanges and join comparisons below run on the canonical
     // md5-derived 60-bit long (8-byte fixed-width rows instead of
@@ -631,7 +602,6 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("dynamic partition pruning: a selective dim filter prunes fact partitions at runtime") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     // the 100-TB layout move: facts partitioned by the join key, dims
     // filtered at runtime — the fact scan must carry a DPP subquery in
@@ -663,7 +633,6 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("runtime bloom-filter join: a selective dim filter prunes fact rows at the scan") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     // the non-partitioned sibling of the DPP proof: when the fact is NOT
     // laid out by the join key, Spark's runtime bloom filter (built from
@@ -699,7 +668,6 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("prefix-filter miner: zero recall loss vs brute force; boilerplate grams never join") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     // synthetic: a boilerplate footer gram in EVERY doc + one true dup pair
     val docs = ((1 to 50).map(i => (i.toLong, s"unique text number $i all rights reserved")) ++
@@ -743,7 +711,6 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("round-8 bucketed medians: no whole-group rank window anywhere in ts_seasonal_esd") {
-    spark.sparkContext.setLogLevel("ERROR")
     import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
     import org.apache.spark.sql.catalyst.expressions.{RowNumber, WindowExpression}
     val sf = "/root/testdata/sf0.001"
@@ -780,7 +747,6 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("round-8 additions plan scale-shaped: hashed symspell keys, broadcast geo/bloom sides") {
-    spark.sparkContext.setLogLevel("ERROR")
     val sf = "/root/testdata/sf0.001"
     // dedup_symspell: every variant-bucket join compares 8-byte longs
     import org.apache.spark.sql.catalyst.expressions.AttributeReference
@@ -823,7 +789,6 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("round-6 TPC-H additions plan scale-shaped: q6 pushdown, q19 envelope, no cartesians") {
-    spark.sparkContext.setLogLevel("ERROR")
     val sf = "/root/testdata/sf0.001"
     def planOf(q: graft.Q): String = {
       val df = q.fn(spark, sf)
@@ -854,7 +819,6 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("registry-wide self-join lint: every uncapped self-join is a curated exemption") {
-    spark.sparkContext.setLogLevel("ERROR")
     // the lint itself must flag the dangerous shape: a raw row-level
     // gram self-join (the pre-fix shingle miner) with no cap boundary
     import org.apache.spark.sql.catalyst.plans.logical.Join
@@ -944,7 +908,6 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("round-10 unigram encode plans scale-shaped: zero windows, broadcast DP side, no cartesian") {
-    spark.sparkContext.setLogLevel("ERROR")
     import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
     val sf = "/root/testdata/sf0.001"
     // the corpus-sized path of both encode queries is ONE (…, word)
@@ -972,7 +935,6 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("round-11 ann_shard_manifest: routing is broadcast-only — no shuffled join anywhere") {
-    spark.sparkContext.setLogLevel("ERROR")
     // the manifest is #cells rows and every join in the query carries an
     // explicit broadcast() (query→shard routing, totals, probe census):
     // with autoBroadcastJoinThreshold=-1 in this session, ANY shuffled
@@ -990,7 +952,6 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("round-12 pipeline_epoch_shuffle: map-only permutation — no window, no shuffled join") {
-    spark.sparkContext.setLogLevel("ERROR")
     import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
     // the whole point of the Feistel order is that there is NO data-
     // sized sort/shuffle-join anywhere: positions are per-row integer
@@ -1022,7 +983,6 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("round-12 pipeline_resume_cursor: rank selection without a global sort") {
-    spark.sparkContext.setLogLevel("ERROR")
     import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
     // the exact order statistic must come from the bucket census + a
     // PARTITIONED per-bucket window — a global (empty-partition) window
@@ -1052,7 +1012,6 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("round-13 clean-triple phash keys: complete for Hamming <= 3, and keys collide only on block equality") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     // property pin of the Manku-Jain-Das Sarma construction behind the
     // phash pair miner: for ANY hash and ANY <=3 bit flips, the two
@@ -1082,7 +1041,6 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("round-13 pipeline_epoch_pack: shuffled-order packing keeps the pack window discipline") {
-    spark.sparkContext.setLogLevel("ERROR")
     import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Window => LWindow}
     // packing in Feistel order must not smuggle in a data-sized global
     // sort: the only global windows allowed are the two per-epoch
@@ -1119,7 +1077,6 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("round-12 ann_shard_rebalance: move-list plan is broadcast-only — no shuffled join") {
-    spark.sparkContext.setLogLevel("ERROR")
     // both epoch assignments are broadcast-NLJ (tiny centroid set against
     // the corpus scan), the apportionment windows sit on #cells
     // aggregates, and the spine joins carry explicit broadcast(): any
@@ -1159,7 +1116,6 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("self-join lint: a count cap under OR is not a cap boundary") {
-    spark.sparkContext.setLogLevel("ERROR")
     import org.apache.spark.sql.Column
     import org.apache.spark.sql.catalyst.plans.logical.Join
     import org.apache.spark.sql.expressions.Window

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,16 +11,11 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class SeriesOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = GraftSession("local[4]", 4)
 
   override def afterAll(): Unit = spark.stop()
 
   test("Series.ewmaLast folds s_1 = x_1, s_i = (1-a)s + a x in order") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     // series A: 1, 2, 3, 4.5 at alpha .25 → 1, 1.25, 1.6875, 2.390625
     // series B: single point → its own value at every alpha
@@ -43,7 +37,6 @@ class SeriesOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("Series.madOutliers flags only robust-score breaches and skips MAD=0 groups") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     // group g: median 10.5, MAD 1.5 → 30 scores ≈ 8.8 (flagged), the
     // rest ≤ ~1.1 (kept out). group z: over half the values identical →
@@ -56,7 +49,6 @@ class SeriesOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("Text BPE merge: greedy leftmost replace preserves framing and merges chains") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val seqs = Seq("aa bb aa bb cc", "aa aa aa aa", "xx").toDF("text")
       .select(graft.ops.Text.bpeInitSeq(col("text")).as("seq"))
@@ -78,7 +70,6 @@ class SeriesOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("Sample.priorityWeighted favors heavy rows, is deterministic, exact-integer") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     // 50 light rows (w=1) vs 50 heavy rows (w=1000): a k=20 sample
     // should be dominated by heavy ids
@@ -93,7 +84,6 @@ class SeriesOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("Graph.triangles counts each triangle once per member vertex") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     // K4 on {1..4}: 4 triangles, each vertex in 3 of them; square
     // {10..13}: none; duplicate + reversed edges must not double-count
@@ -113,7 +103,6 @@ class SeriesOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("Ann.hardNegatives returns nearest DIFFERENT-label rows only") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     // label 0 cluster near (1,0), label 1 near (0.9, 0.1) (the hard
     // negatives), label 2 orthogonal (0,1) (easy, must rank below)
@@ -128,7 +117,6 @@ class SeriesOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("Profile.profile: one row per column, typed min/max surfaces, null counting") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val df = Seq((1L, Some(2.5), "x"), (2L, None, "y"), (3L, Some(7.5), "y"))
       .toDF("id", "v", "s")
@@ -146,7 +134,6 @@ class SeriesOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("Text.bpeTrain: N rounds produce the classic merge cascade") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     // "abab"-style corpus: round 1 merges the most frequent adjacent
     // pair, later rounds merge the merged symbols further
@@ -165,7 +152,6 @@ class SeriesOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("Text.bpeTrain round-12 depth guard + rematEvery bit-equality") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     // the loud guard: past MaxChainedMerges the default (never-
     // re-materialize) path must THROW before any job runs, naming the
@@ -195,7 +181,6 @@ class SeriesOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("Text.wordpieceTrain picks the EXCLUSIVE rare pair BPE would skip (likelihood gain vs raw count)") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     // (a, b) is FREQUENT but independent: a and b each also occur alone
     // everywhere, so p(ab)/(p(a)p(b)) is small. (x, y) is RARE but
@@ -224,7 +209,6 @@ class SeriesOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("q_lda_calibration machinery: planted separable data yields a MONOTONE reliability diagram") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     // the corpus query's table is prior-dominated (documented: the flat
     // diagram IS its honest diagnostic); the math is certified here on
@@ -273,7 +257,6 @@ class SeriesOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("dedup_minhash_bbit: provable invariants — truth pairs >= 5000 bp, estimates clamped, constant pair set") {
-    spark.sparkContext.setLogLevel("ERROR")
     val rows = graft.queries.Dedup.minhashBbit.fn(spark, "/root/testdata/sf0.001")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
     assert(rows.map(_._1).toSeq == Seq(1L, 2L, 4L, 8L))
@@ -288,7 +271,6 @@ class SeriesOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("holtStepSql packed fold == direct Scala recurrence on random series (incl. negatives)") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     import org.apache.spark.sql.functions._
     // the JVM reference: Long division truncates toward zero — exactly

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -17,17 +16,11 @@ import org.scalatest.funsuite.AnyFunSuite
 class SessionHygieneSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val sfDir = "/root/testdata/sf0.001"
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+  private lazy val spark = GraftSession("local[4]", 4)
 
   override def afterAll(): Unit = spark.stop()
 
   test("graph_squares_copurchase leaves no CacheManager entries behind") {
-    spark.sparkContext.setLogLevel("ERROR")
     spark.catalog.clearCache()
     assert(spark.sharedState.cacheManager.isEmpty, "precondition: cache clear")
     val out = SparkEntry.queries("graph_squares_copurchase")(spark, sfDir)
@@ -39,7 +32,6 @@ class SessionHygieneSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("the surviving blocks are only the GC-managed 30-row checkpoint") {
-    spark.sparkContext.setLogLevel("ERROR")
     val before = spark.sparkContext.getPersistentRDDs.keySet
     val out = SparkEntry.queries("graph_squares_copurchase")(spark, sfDir)
     assert(out.count() <= 30)
@@ -48,5 +40,38 @@ class SessionHygieneSpec extends AnyFunSuite with BeforeAndAfterAll {
     // reclaims it on GC); the eg/ac intermediates must not
     assert(leaked.size <= 1,
       s"expected at most the result checkpoint to survive, got RDDs $leaked")
+  }
+
+  // Every session is built by GraftSession, so the tests run the plans
+  // Bench and Verify run. Each file allowed its own builder, and why:
+  private val ownBuilder = Map(
+    "src/main/scala/graft/GraftSession.scala" -> "the factory itself",
+    "src/test/scala/graft/QueriesSmokeSpec.scala" ->
+      "every query must also resolve on a session built without GraftExtensions",
+    "src/test/scala/graft/UrlEncodeWarpSpec.scala" ->
+      "checks the imperative register on a session built without GraftExtensions")
+
+  test("sessions come from GraftSession; test log level comes from log4j2.properties") {
+    import scala.jdk.CollectionConverters._
+    def sources(root: String): Seq[(String, String)] = {
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
+      try walk.iterator().asScala.map(_.toString).filter(_.endsWith(".scala"))
+        .map(f => f -> new String(java.nio.file.Files.readAllBytes(
+          java.nio.file.Paths.get(f)), "UTF-8")).toList
+      finally walk.close()
+    }
+    // split so this file does not match itself
+    val builder = "SparkSession.builder" + "()"
+    val setLevel = "setLog" + "Level"
+    val main = sources("src/main/scala")
+    val tests = sources("src/test/scala")
+    assert(main.nonEmpty && tests.nonEmpty, "run from the project root")
+    val building = (main ++ tests).collect { case (f, src) if src.contains(builder) => f }.toSet
+    assert(building -- ownBuilder.keySet == Set.empty,
+      "build the session with GraftSession(master, partitions), or allowlist the file with a reason")
+    assert(ownBuilder.keySet -- building == Set.empty, "stale allowlist entries")
+    val leveled = tests.collect { case (f, src) if src.contains(setLevel) => f }
+    assert(leveled.isEmpty,
+      s"set test log levels in src/test/resources/log4j2.properties, not in $leveled")
   }
 }

@@ -1,7 +1,6 @@
 package graft
 
 import graft.ops.Sketch
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -13,18 +12,13 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class SketchSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = GraftSession("local[4]", 4)
 
   private def sf(dir: String) = s"/root/testdata/$dir"
 
   override def afterAll(): Unit = spark.stop()
 
   test("count-min never underestimates and is exact when width >> keys") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val exact = (1 to 500).map(i => (s"key$i", (i % 37 + 1).toLong)).toDF("key", "n")
     // tight sketch: collisions certain at w=32

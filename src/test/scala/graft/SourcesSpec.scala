@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,17 +11,11 @@ import java.nio.file.Files
   */
 class SourcesSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+  private lazy val spark = GraftSession("local[2]", 2)
 
   override def afterAll(): Unit = spark.stop()
 
   test("ORC source round-trips with predicate pushdown to the scan") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_orc").toString
     (1L to 1000L).map(i => (i, s"t${i % 5}", i * 1.5)).toDF("id", "tag", "v")
@@ -38,7 +31,6 @@ class SourcesSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("parquet zstd compression round-trips (the 100 TB storage codec)") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_zstd").toString
     (1L to 500L).map(i => (i, s"payload_$i")).toDF("id", "p")
@@ -50,7 +42,6 @@ class SourcesSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("binaryFile source: whole files as binary rows (the multimodal ingestion path)") {
-    spark.sparkContext.setLogLevel("ERROR")
     // image/audio ingestion at scale starts here: one row per object with
     // the raw bytes + metadata, then decode via mapPartitions (the
     // multimodal_meta query's stubbed decoder consumes exactly this shape)
@@ -75,7 +66,6 @@ class SourcesSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("JSON source PERMISSIVE: corrupt records captured, good rows parsed") {
-    spark.sparkContext.setLogLevel("ERROR")
     val dir = Files.createTempDirectory("graft_json").toFile
     Files.write(new java.io.File(dir, "d.json").toPath,
       ("""{"metric":"a","value":1.5}""" + "\n" +

@@ -2,7 +2,7 @@ package graft
 
 import graft.core.GtsRow
 import graft.streaming.GraphiteStream
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
@@ -47,13 +47,7 @@ object StreamingSpec {
   */
 class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .appName("graft-streaming-spec")
-    .getOrCreate()
+  private lazy val spark = GraftSession("local[4]", 4)
 
   override def afterAll(): Unit = spark.stop()
 
@@ -64,7 +58,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("file source -> parse -> windowed counts in memory sink") {
-    spark.sparkContext.setLogLevel("ERROR")
     val dir = Files.createTempDirectory("graft_stream_in").toFile
     val lines = Seq(
       "sys.cpu.user;host=web01 0.5 1546420308",   // seconds
@@ -90,7 +83,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("watermark drops late data in append mode") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_late").toFile
     // batch 1: 10:00:10 and 10:30:00 -> watermark advances to 10:20
@@ -154,7 +146,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("ingest metrics: observe counts datapoints and PERMISSIVE parse errors (A35)") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     import org.apache.spark.sql.functions._
     val dir = Files.createTempDirectory("graft_ingest_metrics").toFile
@@ -178,7 +169,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("mapGroupsWithState running counts accumulate across micro-batches") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_state").toFile
     Files.write(new java.io.File(dir, "b1.txt").toPath,
@@ -202,7 +192,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("streaming dedup: dropDuplicates suppresses replays across micro-batches") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_dedup").toFile
     Files.write(new java.io.File(dir, "b1.txt").toPath,
@@ -225,7 +214,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("stream-stream join: two watermarked line streams join within a time bound") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     import org.apache.spark.sql.functions._
     val dirA = Files.createTempDirectory("graft_ss_a").toFile
@@ -257,7 +245,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("checkpoint recovery: stateful query restarts and keeps its state") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_ckpt_in").toFile
     val ckpt = Files.createTempDirectory("graft_ckpt").toString
@@ -290,7 +277,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("streaming session windows merge within the gap and split across it") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     import org.apache.spark.sql.functions._
     val dir = Files.createTempDirectory("graft_sess").toFile
@@ -317,7 +303,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("influx and opentsdb streaming pipelines end-to-end") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val dirI = Files.createTempDirectory("graft_influx_s").toFile
     Files.write(new java.io.File(dirI, "b.txt").toPath,
@@ -348,7 +333,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("transformWithState timers: session closes when the WATERMARK passes last+gap") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, timestamp_millis}
     val dir = Files.createTempDirectory("graft_timer").toFile
@@ -384,7 +368,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("transformWithState (v2 API, RocksDB store): per-series stats accumulate") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_tws").toFile
     Files.write(new java.io.File(dir, "b1.txt").toPath,
@@ -409,7 +392,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("socket source: live TCP lines parse like the reference's graphite listener (A2)") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val server = new java.net.ServerSocket(0)
     val port = server.getLocalPort
@@ -447,7 +429,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("dropDuplicatesWithinWatermark: bounded-state streaming dedup") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     import org.apache.spark.sql.functions._
     val dir = Files.createTempDirectory("graft_dedup_wm").toFile
@@ -472,7 +453,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("observed metrics: Dataset.observe surfaces counters in streaming progress") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     import org.apache.spark.sql.functions._
     val dir = Files.createTempDirectory("graft_obs").toFile
@@ -505,7 +485,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("ban lifecycle end-to-end: sink error bans, next batch filtered, TTL un-bans (A28)") {
     import graft.streaming.{BanStore, TokenBans}
     import org.apache.spark.sql.Dataset
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val store = new BanStore(banDurationMs = 10000L)
     val clock = new java.util.concurrent.atomic.AtomicLong(1000L)
@@ -559,7 +538,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("FAILFAST parse throws on the first bad line; PERMISSIVE drops it (graphite.go:49-56 vs :276-283)") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val lines = Seq("a.b 1 1546420308", "not!parseable", "c.d 2 1546420309").toDS()
     assert(graphite(lines).count() == 2)
@@ -577,7 +555,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("negotiated prometheus exposition: proto and text bodies through one ingest (A17)") {
     import graft.parsers.PromProtoParser
     import graft.parsers.PromProtoParser.{Metric, MetricFamily}
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val protoBody = PromProtoParser.encodeDelimited(Seq(
       MetricFamily("m_proto", PromProtoParser.COUNTER,
@@ -596,7 +573,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("prom-proto wire replay: delimited MetricFamily bodies stream across micro-batches") {
     import graft.parsers.PromProtoParser
     import graft.parsers.PromProtoParser.{Bucket, Metric, MetricFamily}
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_promproto").toFile
     def b64(families: Seq[MetricFamily]): String =
@@ -641,7 +617,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("streaming quota: admission state persists across micro-batches") {
     import graft.streaming.{QuotaEvent, TokenBans}
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_quota").toFile
     val events = spark.readStream.text(dir.getAbsolutePath).as[String]
@@ -668,7 +643,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // limits > Int.MaxValue, silently dropping every event for keys far
     // under quota
     import graft.streaming.{QuotaEvent, TokenBans}
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_quota_big").toFile
     val events = spark.readStream.text(dir.getAbsolutePath).as[String]
@@ -689,7 +663,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the SAME greedy rule as ops/Sample.budgetCap — admit iff spent-so-
     // far < budget (overshoot ≤ 1 row), resuming across micro-batches
     import graft.streaming.TokenBans
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_budget").toFile
     val rows = spark.readStream.text(dir.getAbsolutePath).as[String]
@@ -716,7 +689,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("streaming z-score anomaly: stable series quiet, outlier flags, state spans batches") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_anom").toFile
     val points = spark.readStream.text(dir.getAbsolutePath).as[String]
@@ -787,7 +759,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // so far (bounded sketch, no false negatives), bloom-hits are
     // confirmed by an exact anti-join against the seen-fingerprint store,
     // and only genuinely-new docs pass through + extend the store.
-    spark.sparkContext.setLogLevel("ERROR")
     import org.apache.spark.sql.functions._
     val in = Files.createTempDirectory("graft_incdedup_in").toFile
     val seenDir = Files.createTempDirectory("graft_incdedup_seen").toString + "/fps"
@@ -837,7 +808,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("EwmaProcessor matches the batch ts_ewma fold EXACTLY across micro-batches") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     val dir = Files.createTempDirectory("graft_ewma").toFile
@@ -885,7 +855,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("HoltProcessor matches the batch ts_holt_forecast fold EXACTLY across micro-batches") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, expr}
     val dir = Files.createTempDirectory("graft_holt").toFile
@@ -926,7 +895,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("SloBurnProcessor matches the batch ts_slo_burn rows EXACTLY across micro-batches") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, expr}
     val dir = Files.createTempDirectory("graft_slo").toFile
@@ -973,7 +941,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("TempMixProcessor matches the batch temperature allocation EXACTLY per batch") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     val dir = Files.createTempDirectory("graft_mix").toFile
@@ -1010,7 +977,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("LshGateProcessor: streamed candidate set == batch candidatePairs, any split") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     val dir = Files.createTempDirectory("graft_lshgate").toFile
@@ -1052,7 +1018,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // text LSH and phash: bucket key = the prefix gram itself, the exact
     // Jaccard check filters candidates, and the result must equal the
     // batch prefix-filter query (whose df belt is vacuous at this SF)
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     val dir = Files.createTempDirectory("graft_prefixgate").toFile
@@ -1108,7 +1073,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // Hamming <= 3, and the exact distance filter equalizes the
     // candidate supersets (caps vacuous at this SF), so set equality
     // is the correct pin across the two constructions
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_phashgate").toFile
     val sfDir = "/root/testdata/sf0.001"
@@ -1158,7 +1122,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // edit-distance-<=1 checker filters the candidates, and the result
     // must equal the batch dedup_symspell pair set (whose df-cap at 128
     // is vacuous at this SF)
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_symgate").toFile
     val sfDir = "/root/testdata/sf0.001"
@@ -1208,7 +1171,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("OrdinalProcessor: streamed pattern counts == ts_ordinal_patterns histogram") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, expr}
     val dir = Files.createTempDirectory("graft_ordinal").toFile
@@ -1249,7 +1211,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("GapStatsProcessor: running gap moments == ts_burstiness after the full stream") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     val dir = Files.createTempDirectory("graft_gapstats").toFile
@@ -1292,7 +1253,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("GapMemoryProcessor: running lag-1 gap correlation == ts_gap_memory after the full stream") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     val dir = Files.createTempDirectory("graft_gapmem").toFile
@@ -1334,7 +1294,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("MannKendallProcessor: running windowed trend test == ts_mann_kendall after the full stream") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, expr}
     val dir = Files.createTempDirectory("graft_mk").toFile
@@ -1378,7 +1337,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("BenfordProcessor: running digit audit == quality_benford after the full stream") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     import org.apache.spark.sql.functions.expr
     val dir = Files.createTempDirectory("graft_benford").toFile
@@ -1421,7 +1379,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("HistogramQuantileProcessor: running bucketed quantiles == ts_histogram_quantile after the full stream") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, expr}
     val dir = Files.createTempDirectory("graft_hq").toFile
@@ -1460,7 +1417,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("HdrProcessor: streamed quantiles == sketch_hdr_quantiles under shuffled slicing") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_hdr").toFile
     val sfDir = "/root/testdata/sf0.001"
@@ -1504,7 +1460,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("MatrixProfileProcessor: streamed banded profile == brute force per position") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, expr}
     val dir = Files.createTempDirectory("graft_mp").toFile
@@ -1560,7 +1515,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("MsfProcessor: online forest == batch Boruvka MSF under shuffled arrivals") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_msf").toFile
     val sfDir = "/root/testdata/sf0.001"
@@ -1598,7 +1552,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("GramGateProcessor: streamed dotplot matches + islands agg == dedup_max_span") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, count, lit, min, row_number}
     import org.apache.spark.sql.expressions.Window
@@ -1665,7 +1618,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("GramGateProcessor: bucket saturates at the cap — later arrivals dropped") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_gramcap").toFile
     // one gram, 4 occurrences across 2 micro-batches, cap 3: the 4th
@@ -1691,7 +1643,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("SloBurnLateProcessor: watermark drops late points, admitted points match the ring") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_slolate").toFile
     val H = 3600000000L // one hour in µs
@@ -1740,7 +1691,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("AttributionProcessor: streamed purchase credits == batch window fold") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     import org.apache.spark.sql.functions.{coalesce, col, expr, first, last, lit, when}
     val dir = Files.createTempDirectory("graft_attr").toFile
@@ -1789,7 +1739,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("AttributionProcessor recovers first/last-touch state across a checkpoint restart") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     import org.apache.spark.sql.functions.{coalesce, col, expr, first, last, lit, when}
     val sfDir = "/root/testdata/sf0.001"
@@ -1842,7 +1791,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("CusumProcessor: streamed completed hours == batch ts_cusum_alarm rows") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, expr}
     val dir = Files.createTempDirectory("graft_cusum").toFile
@@ -1899,7 +1847,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("PageHinkleyProcessor: streamed final rows == batch ts_page_hinkley BIT-EXACT") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, expr}
     val dir = Files.createTempDirectory("graft_ph").toFile
@@ -1950,7 +1897,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("KalmanProcessor: streamed final state == batch ts_kalman BIT-EXACT") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, expr}
     val dir = Files.createTempDirectory("graft_kalman").toFile
@@ -1992,7 +1938,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("AlertForProcessor: streamed pending/firing rows == batch ts_alert_for") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, expr}
     val dir = Files.createTempDirectory("graft_alertfor").toFile
@@ -2037,7 +1982,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("CounterRateProcessor: streamed completed hours == batch ts_counter_rate") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, expr}
     val dir = Files.createTempDirectory("graft_ctrrate").toFile
@@ -2087,7 +2031,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("M4Processor: streamed completed buckets == batch ts_downsample_m4") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, expr}
     val dir = Files.createTempDirectory("graft_m4").toFile
@@ -2130,7 +2073,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("Cusum + GramGate processors recover their state across a checkpoint restart") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, expr}
     val sfDir = "/root/testdata/sf0.001"
@@ -2229,7 +2171,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("SloBurn + TempMix processors recover their state across a checkpoint restart") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, expr}
     // --- SloBurn: stop after batch 1, restart from the checkpoint,
@@ -2308,7 +2249,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("SpaceSavingProcessor: heavy-hitter superset + count-bound guarantees across batches") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     val dir = Files.createTempDirectory("graft_ss").toFile
@@ -2359,7 +2299,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("BottomKProcessor equals the batch priority sample bit-for-bit across micro-batches") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     val dir = Files.createTempDirectory("graft_bk").toFile
@@ -2401,7 +2340,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("BottomKProcessor recovers the reservoir across a checkpoint restart") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     val dir = Files.createTempDirectory("graft_bk_ck_in").toFile
@@ -2445,7 +2383,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("SpeedGateProcessor counters equal the batch geo_speed_gate lag window") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     val dir = Files.createTempDirectory("graft_speedgate").toFile
@@ -2510,7 +2447,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("BloomManifestProcessor equals the batch per-file bloom manifest bit-for-bit") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, expr}
     val dir = Files.createTempDirectory("graft_bloomman").toFile
@@ -2564,7 +2500,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("CountMinProcessor table equals the batch CM counters bit-for-bit (linear sketch)") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, expr, explode}
     val dir = Files.createTempDirectory("graft_cm").toFile
@@ -2608,7 +2543,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("CountMinProcessor recovers its counter table across a checkpoint restart") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, expr, explode}
     val dir = Files.createTempDirectory("graft_cm_ck_in").toFile
@@ -2655,7 +2589,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("KmvProcessor matches the batch sketch_kmv estimate EXACTLY across micro-batches") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     val dir = Files.createTempDirectory("graft_kmv").toFile
@@ -2695,7 +2628,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("MedianProcessor matches the batch ts_rolling_median EXACTLY (pure integers)") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, expr}
     val dir = Files.createTempDirectory("graft_med").toFile
@@ -2735,7 +2667,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("RecordsProcessor: running record counts == ts_record_stats after the full stream") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, expr}
     val dir = Files.createTempDirectory("graft_records").toFile
@@ -2781,7 +2712,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("VarianceRatioProcessor: running VR(q) moments == ts_variance_ratio after the full stream") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, expr}
     val dir = Files.createTempDirectory("graft_vr").toFile
@@ -2827,7 +2757,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("WelchProcessor: running A/B moments == q_ab_welch after the full stream") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, expr}
     val dir = Files.createTempDirectory("graft_welch").toFile
@@ -2874,7 +2803,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("RunsTestProcessor: runs state vs the frozen median == ts_runs_test after the full stream") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, expr}
     val dir = Files.createTempDirectory("graft_runs").toFile
@@ -2928,7 +2856,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("AdfProcessor: running Dickey-Fuller moments == ts_adf_lite after the full stream") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, expr}
     val dir = Files.createTempDirectory("graft_adf").toFile
@@ -2976,7 +2903,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("DiversityProcessor: MapState running Simpson == quality_diversity_index, any split") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     val dir = Files.createTempDirectory("graft_diversity").toFile
@@ -3020,7 +2946,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("KAnonymityProcessor: MapState per-group (ksize, ldiv) == quality_k_anonymity, any split") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, expr}
     val dir = Files.createTempDirectory("graft_kanon").toFile
@@ -3072,7 +2997,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("PiiProcessor: running per-source census == quality_pii_census, any split") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, expr}
     val dir = Files.createTempDirectory("graft_pii").toFile
@@ -3117,7 +3041,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("KAnonymityProcessor recovers its MapState across a checkpoint restart") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, expr}
     // the Adf restart spec proves ValueState recovery; this proves the
@@ -3163,7 +3086,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("AdfProcessor recovers its moment state across a checkpoint restart") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, expr}
     val sfDir = "/root/testdata/sf0.001"
@@ -3214,7 +3136,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("ExtremalProcessor: exceedance clustering vs the frozen threshold == ts_extremal_index") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, expr}
     val dir = Files.createTempDirectory("graft_extremal").toFile
@@ -3264,7 +3185,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("ConformalProcessor: coverage census vs frozen (med, qhat) == quality_conformal_bounds") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, expr}
     val dir = Files.createTempDirectory("graft_conformal").toFile
@@ -3314,7 +3234,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("TClosenessProcessor: per-group EMD vs frozen global == tClosenessGroups") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, count, expr, lit}
     val dir = Files.createTempDirectory("graft_tclose").toFile
@@ -3369,7 +3288,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("ZonemapProcessor: running per-file (min,max,count) == batch zone-map aggregate") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, expr}
     val dir = Files.createTempDirectory("graft_zonemap").toFile
@@ -3414,7 +3332,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("DedupRateProcessor: running dup rates == batch countDistinct, across a restart") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, conv, substring}
     val dir = Files.createTempDirectory("graft_duprate_in").toFile
@@ -3468,7 +3385,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("CompactionPlanProcessor: running bin ledger == the batch window fold") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions.{coalesce, col, count, expr, lit, max, sum}
@@ -3533,7 +3449,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("CompactionPlanProcessor recovers the open bin across a checkpoint restart") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     val dir = Files.createTempDirectory("graft_compaction_ck_in").toFile
@@ -3591,7 +3506,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("Utf8GateProcessor: running per-source byte-class census == batch encodingMetrics") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, count, expr, lit, sum}
     val dir = Files.createTempDirectory("graft_utf8gate").toFile
@@ -3634,7 +3548,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("SpeedGateHopsProcessor emits exactly the batch teleport hop set, once each") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     val dir = Files.createTempDirectory("graft_speedgate_hops").toFile
@@ -3688,7 +3601,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("LdaProcessor: running LDA model == q_lda_classifier's model after the full stream") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_lda").toFile
     val sfDir = "/root/testdata/sf0.001"
@@ -3724,7 +3636,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("RidgeProcessor recovers its moment state across a checkpoint restart") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val sfDir = "/root/testdata/sf0.001"
     val dirA = Files.createTempDirectory("graft_ridge_ck_in").toFile
@@ -3767,7 +3678,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("RidgeProcessor: running ridge fit == q_ridge_fit after the full stream") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     val dir = Files.createTempDirectory("graft_ridge").toFile
@@ -3808,7 +3718,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("UnigramProcessor: streamed word stats -> re-trained vocab == batch trainer, across a checkpoint restart") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val sfDir = "/root/testdata/sf0.001"
     val docs = Tables.t(spark, sfDir, "documents")
@@ -3857,7 +3766,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("TrainerCoverageProcessor: running coverage census == batch diagnostic's unigram rows, across a checkpoint restart") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val sfDir = "/root/testdata/sf0.001"
     val docs = Tables.t(spark, sfDir, "documents")
@@ -3916,7 +3824,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("LdaServe: online train->serve loop — evolving model registry, frozen-snapshot scoring, exact batch parity under any split") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     import graft.streaming.LdaServe
     val sfDir = "/root/testdata/sf0.001"
@@ -4031,7 +3938,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("BbitProcessor: running b-bit calibration == dedup_minhash_bbit after the full stream") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val (lines, want) = bbitFixture()
     assert(lines.length >= 4, "fixture must carry ground-truth pairs")
@@ -4061,7 +3967,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("BbitProcessor recovers its census across a checkpoint restart") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val (lines, want) = bbitFixture()
     val dir = Files.createTempDirectory("graft_bbit_ck_in").toFile
@@ -4120,7 +4025,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("CapCensusProcessor: running cap-bite census == Scale.capCensus after the full stream") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val (lines, want) = capFixture()
     val dir = Files.createTempDirectory("graft_capc_in").toFile
@@ -4162,7 +4066,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("CapCensusProcessor recovers the census across a checkpoint restart") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val (lines, want) = capFixture()
     val dir = Files.createTempDirectory("graft_capc_ck_in").toFile
@@ -4219,7 +4122,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("ExactKeepProcessor: winner rows under adversarial order == the batch keep census") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val (lines, want) = keepFixture()
     val dir = Files.createTempDirectory("graft_keep_in").toFile
@@ -4252,7 +4154,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("ExactKeepProcessor recovers winners across a checkpoint restart") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val (lines, want) = keepFixture()
     val dir = Files.createTempDirectory("graft_keep_ck_in").toFile
@@ -4311,7 +4212,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("ResumeCursorProcessor: streamed bucket census == driver fold AND the batch cursor's bucket") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val (lines, want) = cursorFixture()
     // the batch query must agree on (k, bucket) per (epoch, pct) — the
@@ -4351,7 +4251,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("ResumeCursorProcessor recovers the census across a checkpoint restart") {
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val (lines, want) = cursorFixture()
     val dir = Files.createTempDirectory("graft_cursor_ck_in").toFile

@@ -13,15 +13,7 @@ import java.lang.ref.WeakReference
 class TablesSpec extends AnyFunSuite {
   private val sfDir = "/root/testdata/sf0.001"
 
-  private def session(): SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  private def session(): SparkSession = GraftSession("local[2]", 2)
 
   private def stop(s: SparkSession): Unit = {
     s.stop()

@@ -1,7 +1,6 @@
 package graft
 
 import graft.ops.Scale
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -14,19 +13,9 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class TopKPerGroupSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private var spark: SparkSession = _
+  private lazy val spark = GraftSession("local[4]", 8)
 
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-topk-spec")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override def afterAll(): Unit = spark.stop()
 
   private def sfDir = "/root/testdata/sf0.001"
 
@@ -37,7 +26,7 @@ class TopKPerGroupSpec extends AnyFunSuite with BeforeAndAfterAll {
         Seq(("value", false), ("event_id", true)), 3)
       .orderBy("event_type", "event_id")
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSeq
-    val want = {
+    val want = ruleOff {
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy("event_type")
         .orderBy(col("value").desc, col("event_id").asc)
@@ -84,12 +73,12 @@ class TopKPerGroupSpec extends AnyFunSuite with BeforeAndAfterAll {
         .repartition(4)
       val got = Scale.topKPerGroup(df, Seq("g"), Seq(("v", true)), 2)
         .collect().map(r => (r.getInt(0), r.getLong(1))).toSet
-      val want = {
+      val want = ruleOff {
         import org.apache.spark.sql.expressions.Window
         val w = Window.partitionBy("g").orderBy(col("v").asc)
         df.withColumn("rn", row_number().over(w)).filter(col("rn") <= 2).drop("rn")
-          .collect().map(r => (r.getInt(0), r.getLong(1))).toSet
-      }
+          .collect().map(r => (r.getInt(0), r.getLong(1)))
+      }.toSet
       assert(got.size == 1000)
       assert(got == want)
     } finally sp.conf.unset("graft.topKPerGroup.flushBytes")
@@ -136,11 +125,12 @@ class TopKPerGroupSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(ex.getMessage.contains("nope"))
   }
 
-  private def withRewrite[A](f: => A): A = {
-    spark.experimental.extraOptimizations =
-      Seq(graft.plans.TopKRewrite(spark))
-    graft.plans.TopKPerGroup.ensureStrategy(spark)
-    try f finally spark.experimental.extraOptimizations = Nil
+  /** `f` under TopKRewrite's kill switch: the plain window plan, the
+    * reference the rewritten plans are checked against.
+    */
+  private def ruleOff[A](f: => A): A = {
+    spark.conf.set("spark.graft.rewrite.topK", "false")
+    try f finally spark.conf.unset("spark.graft.rewrite.topK")
   }
 
   private def finalPlan(df: org.apache.spark.sql.DataFrame): String = {
@@ -156,21 +146,15 @@ class TopKPerGroupSpec extends AnyFunSuite with BeforeAndAfterAll {
       .orderBy(col("value").desc, col("event_id").asc)
     def idiom = e.withColumn("rn", row_number().over(w))
       .filter(col("rn") <= 3).drop("rn")
-    val want = idiom.orderBy("event_type", "event_id")
-      .collect().map(_.toSeq).toSeq // rule off: plain window plan
-    val (got, plan) = withRewrite {
-      val df = idiom
-      val p = finalPlan(df)
-      (df.orderBy("event_type", "event_id").collect().map(_.toSeq).toSeq, p)
-    }
+    val want = ruleOff(idiom.orderBy("event_type", "event_id")
+      .collect().map(_.toSeq).toSeq)
+    val plan = finalPlan(idiom)
+    val got = idiom.orderBy("event_type", "event_id").collect().map(_.toSeq).toSeq
     assert(plan.contains("TopKPerGroup"), s"rewrite did not fire:\n$plan")
     assert(!plan.contains("Window"), s"WindowExec survived the rewrite:\n$plan")
     assert(want.nonEmpty && got == want, "rewritten results diverged from the window form")
     // kill switch honored
-    val off = withRewrite {
-      spark.conf.set("spark.graft.rewrite.topK", "false")
-      try finalPlan(idiom) finally spark.conf.unset("spark.graft.rewrite.topK")
-    }
+    val off = ruleOff(finalPlan(idiom))
     assert(!off.contains("TopKPerGroupExec"), s"kill switch ignored:\n$off")
   }
 
@@ -181,21 +165,15 @@ class TopKPerGroupSpec extends AnyFunSuite with BeforeAndAfterAll {
     val w = Window.partitionBy("g").orderBy(col("v").desc)
     def idiom = df.withColumn("rn", row_number().over(w))
       .filter(col("rn") <= 5 && col("v") % 2 === 0).drop("rn")
-    val want = idiom.collect().map(_.toSeq).toSet
-    val (got, plan) = withRewrite {
-      val d = idiom
-      (d.collect().map(_.toSeq).toSet, finalPlan(d))
-    }
+    val want = ruleOff(idiom.collect().map(_.toSeq)).toSet
+    val (got, plan) = (idiom.collect().map(_.toSeq).toSet, finalPlan(idiom))
     assert(plan.contains("TopKPerGroup"), s"rewrite did not fire:\n$plan")
     assert(got == want, "residual conjunct lost or misapplied")
     // BETWEEN 1 AND k = vacuous lower bound + cap — still rewrites
     def idiomB = df.withColumn("rn", row_number().over(w))
       .filter(col("rn").between(1, 4)).drop("rn")
-    val wantB = idiomB.collect().map(_.toSeq).toSet
-    val (gotB, planB) = withRewrite {
-      val d = idiomB
-      (d.collect().map(_.toSeq).toSet, finalPlan(d))
-    }
+    val wantB = ruleOff(idiomB.collect().map(_.toSeq)).toSet
+    val (gotB, planB) = (idiomB.collect().map(_.toSeq).toSet, finalPlan(idiomB))
     assert(planB.contains("TopKPerGroup"), s"BETWEEN idiom did not rewrite:\n$planB")
     assert(gotB == wantB, "BETWEEN rewrite diverged")
   }
@@ -205,15 +183,13 @@ class TopKPerGroupSpec extends AnyFunSuite with BeforeAndAfterAll {
     val sp = spark; import sp.implicits._
     val df = (1 to 100).map(i => (i % 5, i / 7.0, i.toLong)).toDF("g", "f", "v")
     val w = Window.partitionBy("g").orderBy(col("v").asc)
-    withRewrite {
-      // rank() has different semantics under ties -> no rewrite
-      val rk = df.withColumn("rn", rank().over(w)).filter(col("rn") <= 2).drop("rn")
-      assert(!finalPlan(rk).contains("TopKPerGroupExec"), "rewrote rank()")
-      // raw-float group keys violate the byte-equality contract -> no rewrite
-      val wf = Window.partitionBy("f").orderBy(col("v").asc)
-      val fl = df.withColumn("rn", row_number().over(wf)).filter(col("rn") <= 2).drop("rn")
-      assert(!finalPlan(fl).contains("TopKPerGroupExec"), "rewrote float group keys")
-    }
+    // rank() has different semantics under ties -> no rewrite
+    val rk = df.withColumn("rn", rank().over(w)).filter(col("rn") <= 2).drop("rn")
+    assert(!finalPlan(rk).contains("TopKPerGroupExec"), "rewrote rank()")
+    // raw-float group keys violate the byte-equality contract -> no rewrite
+    val wf = Window.partitionBy("f").orderBy(col("v").asc)
+    val fl = df.withColumn("rn", row_number().over(wf)).filter(col("rn") <= 2).drop("rn")
+    assert(!finalPlan(fl).contains("TopKPerGroupExec"), "rewrote float group keys")
   }
 
   test("TopKRewrite: rank-keeping projections rewrite with the EMITTED rank (r8 #5)") {
@@ -224,11 +200,8 @@ class TopKPerGroupSpec extends AnyFunSuite with BeforeAndAfterAll {
     val w = Window.partitionBy("g").orderBy(col("v").desc) // v unique per g: total
 
     def kept = df.withColumn("rn", row_number().over(w)).filter(col("rn") <= 5)
-    val want = kept.collect().map(_.toSeq).toSet // rule off: window plan
-    val (got, plan) = withRewrite {
-      val d = kept
-      (d.collect().map(_.toSeq).toSet, finalPlan(d))
-    }
+    val want = ruleOff(kept.collect().map(_.toSeq)).toSet
+    val (got, plan) = (kept.collect().map(_.toSeq).toSet, finalPlan(kept))
     assert(plan.contains("TopKPerGroup"), s"rank-keeping rewrite did not fire:\n$plan")
     assert(!plan.contains("Window"), s"WindowExec survived:\n$plan")
     assert(want.nonEmpty && got == want,
@@ -236,11 +209,8 @@ class TopKPerGroupSpec extends AnyFunSuite with BeforeAndAfterAll {
     // rank DERIVED in the projection (rn used in an expression) also routes
     def derived = df.withColumn("rn", row_number().over(w))
       .filter(col("rn") <= 3).select(col("g"), (col("rn") * 10).as("r10"))
-    val wantD = derived.collect().map(_.toSeq).toSet
-    val (gotD, planD) = withRewrite {
-      val d = derived
-      (d.collect().map(_.toSeq).toSet, finalPlan(d))
-    }
+    val wantD = ruleOff(derived.collect().map(_.toSeq)).toSet
+    val (gotD, planD) = (derived.collect().map(_.toSeq).toSet, finalPlan(derived))
     assert(planD.contains("TopKPerGroup"), s"derived-rank rewrite did not fire:\n$planD")
     assert(gotD == wantD, "derived-rank results diverged")
   }

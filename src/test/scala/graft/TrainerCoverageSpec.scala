@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
@@ -22,12 +21,7 @@ import java.nio.file.Files
   */
 class TrainerCoverageSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-trainer-coverage-spec")
-    .getOrCreate()
+  private lazy val spark = GraftSession("local[4]", 4)
 
   override def afterAll(): Unit = spark.stop()
 
@@ -43,7 +37,6 @@ class TrainerCoverageSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("corpus invariants: bounded bp, seen <= total, stats row structurally FULL (cap removed)") {
-    spark.sparkContext.setLogLevel("ERROR")
     Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01").foreach { sf =>
       val m = rows(sf)
       assert(m.keySet == Set("unigram_dp_unroll", "unigram_seed_multi",
@@ -102,7 +95,6 @@ class TrainerCoverageSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("planted vocab growth: stats row stays FULL (the r11 cap degradation is structurally gone); seed row matches the independent mirror exactly") {
-    spark.sparkContext.setLogLevel("ERROR")
     Seq(0, 1024, 3072).foreach { extras =>
       val (dir, stats) = planted(extras)
       val m = rows(dir)

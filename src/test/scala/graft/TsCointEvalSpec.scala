@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -17,12 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class TsCointEvalSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+  private lazy val spark = GraftSession("local[4]", 4)
 
   override def afterAll(): Unit = spark.stop()
 
@@ -32,7 +26,6 @@ class TsCointEvalSpec extends AnyFunSuite with BeforeAndAfterAll {
       .map(r => r.getString(0) -> r.getBoolean(1)).toMap
 
   test("planted-trend verdicts hold at sf0.001 and sf0.01") {
-    spark.sparkContext.setLogLevel("ERROR")
     for (dir <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")) {
       val v = verdicts(dir)
       assert(v("adf_level") === false, s"$dir: level series must keep its unit root")

@@ -1,28 +1,37 @@
 package graft
 
 import graft.core.Sensision
-import graft.expressions.{GraftExtensions, UrlEncodeWarp}
-import org.apache.spark.sql.SparkSession
+import graft.expressions.UrlEncodeWarp
+import org.apache.spark.sql.{AnalysisException, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The native codegen'd url_encode_warp expression: registered both
   * imperatively and via SparkSessionExtensions, evaluated through
   * whole-stage codegen, equal to the Scala encoder on random strings.
+  * One test builds its own session without GraftExtensions, so the suite
+  * session is a def: the test after it gets a fresh GraftSession.
   */
 class UrlEncodeWarpSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .withExtensions(new GraftExtensions) // config-driven injection path
-    .getOrCreate()
+  private def session(): SparkSession = GraftSession("local[2]", 2)
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit = SparkSession.getDefaultSession.foreach(_.stop())
+
+  test("every native function resolves by SQL name on a fresh GraftSession") {
+    // newSession(): the extensions, but none of the functions that queries
+    // registered imperatively on the running session
+    val spark = session().newSession()
+    val names = Seq("url_encode_warp", "graft_dot", "graft_dot_long", "graft_nfc",
+      "graft_h60", "image_header_decode", "jpeg_header_decode", "mp4_header_decode",
+      "audio_header_decode", "video_header_decode", "image_ahash", "image_dct_hash",
+      "audio_fingerprint")
+    val missing = names.filterNot(n => spark.catalog.functionExists(n))
+    assert(missing.isEmpty, s"not injected by GraftExtensions: $missing")
+  }
 
   test("extension-injected function matches the Scala encoder (codegen path)") {
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = session()
     import spark.implicits._
     val rnd = new scala.util.Random(13)
     val inputs = Seq("a b", "x+y", "ключ", "a,b/c~d_e", "100%", "") ++
@@ -32,21 +41,30 @@ class UrlEncodeWarpSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("imperative registration on an extension-less session") {
-    val plain = spark.newSession()
-    UrlEncodeWarp.register(plain)
-    import plain.implicits._
-    val got = Seq("my name+1").toDF("s").selectExpr("url_encode_warp(s) AS e").as[String].collect()
-    assert(got.head == "my%20name%2B1")
+    // a session's extensions come from its SparkContext's conf (and
+    // newSession() inherits them), so the plain session needs its own context
+    (SparkSession.getActiveSession ++ SparkSession.getDefaultSession).foreach(_.stop())
+    val plain = SparkSession.builder().master("local[2]")
+      .config("spark.ui.enabled", "false").getOrCreate()
+    try {
+      import plain.implicits._
+      def encode() = Seq("my name+1").toDF("s").selectExpr("url_encode_warp(s) AS e")
+        .as[String].collect()
+      val ex = intercept[AnalysisException](encode())
+      assert(ex.getMessage.contains("url_encode_warp"), ex.getMessage)
+      UrlEncodeWarp.register(plain)
+      assert(encode().head == "my%20name%2B1")
+    } finally plain.stop()
   }
 
   test("null propagates") {
-    UrlEncodeWarp.register(spark)
+    val spark = session()
     val got = spark.sql("SELECT url_encode_warp(CAST(NULL AS STRING)) AS e").collect()
     assert(got.head.isNullAt(0))
   }
 
   test("global-window guard: data-sized unpartitioned window rejected, partitioned and post-agg allowed") {
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = session()
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
     import spark.implicits._
@@ -56,7 +74,6 @@ class UrlEncodeWarpSpec extends AnyFunSuite with BeforeAndAfterAll {
     (1 to 100).map(i => (i.toLong, i % 5)).toDF("id", "grp")
       .write.mode("overwrite").parquet(dir)
     val df = spark.read.parquet(dir)
-    spark.conf.set("spark.graft.guard.globalWindow", "error")
     try {
       val ex = intercept[Exception] {
         df.withColumn("rn", row_number().over(Window.orderBy("id"))).collect()
@@ -76,11 +93,11 @@ class UrlEncodeWarpSpec extends AnyFunSuite with BeforeAndAfterAll {
       // off = guard disarmed
       spark.conf.unset("spark.graft.guard.globalWindow")
       assert(df.withColumn("rn", row_number().over(Window.orderBy("id"))).count() == 100)
-    } finally spark.conf.unset("spark.graft.guard.globalWindow")
+    } finally spark.conf.set("spark.graft.guard.globalWindow", "error")
   }
 
   test("NfcNormalize composes decomposed sequences exactly like DuckDB nfc_normalize") {
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = session()
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, length}
     // "e" + COMBINING ACUTE -> "\u00e9"; "A" + COMBINING DIAERESIS -> "\u00c4";

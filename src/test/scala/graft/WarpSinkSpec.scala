@@ -103,7 +103,6 @@ class WarpSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
     SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession).foreach(_.stop())
     val spark = GraftSession("local[2,4]", 2)
     try {
-      spark.sparkContext.setLogLevel("ERROR")
       val spool = java.nio.file.Files.createTempDirectory("graft_retry_in")
       java.nio.file.Files.writeString(spool.resolve("conn.tsv"), Seq(
         "tokA\tc1\ta.one 1 1546420308", "tokB\tc2\tb.one 1 1546420308",
@@ -131,7 +130,6 @@ class WarpSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("parse modes: permissive drops, failfast throws (per-transport policy)") {
     SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession).foreach(_.stop())
     val spark = GraftSession("local[2]", 2)
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val lines = Seq("ok 1 1546420308", "definitely not parseable").toDS()
     // TCP policy: the bad line vanishes; PERMISSIVE quarantines it as an

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,17 +13,11 @@ import org.scalatest.funsuite.AnyFunSuite
 class WindowAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val sfDir = "/root/testdata/sf0.001"
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .getOrCreate()
+  private lazy val spark = GraftSession("local[4]", 4)
 
   override def afterAll(): Unit = spark.stop()
 
   test("no registered query has a data-sized global window") {
-    spark.sparkContext.setLogLevel("ERROR")
     val results = WindowAudit.audit(spark, sfDir)
     val errs = results.filter(_.err.isDefined)
     assert(errs.isEmpty, s"queries failed to plan: ${errs.map(r => s"${r.name}: ${r.err.get}")}")
