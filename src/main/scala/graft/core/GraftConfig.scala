@@ -12,8 +12,8 @@ final case class GraftConfig(
     warpEndpointDelete: String,     // warp_endpoint_delete (same host default)
     connectionTimeoutMs: Int,   // warp.connection.timeout (300 s)
     dialTimeoutMs: Int,         // warp.connection.dial.timeout (10 s)
-    keepAliveTimeoutMs: Int,    // warp.connection.keep-alive.timeout (30 s); no effect
-                                // until a pooled transport exists (ROADMAP item 2)
+    keepAliveTimeoutMs: Int,    // warp.connection.keep-alive.timeout (30 s): the longest
+                                // a pooled Warp socket may sit idle and still be reused
     bannishmentMs: Long,        // bannishment.duration (3000 ms)
     graphiteParse: Boolean,     // graphite.parse (true)
     dryRun: Boolean)            // dryrun (false)

@@ -8,7 +8,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 import java.util.concurrent.atomic.AtomicLong
-import java.util.concurrent.{ConcurrentLinkedQueue, Executors}
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, Executors}
 import java.util.zip.GZIPInputStream
 
 /** The 12-field per-request access-log record (middlewares/logger.go:79-92)
@@ -61,6 +61,16 @@ final class HttpIngress(
   val reqCount = new AtomicLong
   val errCount = new AtomicLong
   private val accessLogQ = new ConcurrentLinkedQueue[AccessLogRecord]()
+  // one shared copy of each repeated access-log value (client address,
+  // host, method, path, ...), so a retained record holds little of its own
+  private val logValues = new ConcurrentHashMap[String, String]()
+
+  private def canonical(v: String): String = {
+    val c = logValues.get(v)
+    if (c != null) c
+    else if (logValues.size >= HttpIngress.LogValuesCap) v
+    else { val prev = logValues.putIfAbsent(v, v); if (prev == null) v else prev }
+  }
 
   def accessLog: Seq[AccessLogRecord] = {
     val it = accessLogQ.iterator(); val b = Seq.newBuilder[AccessLogRecord]
@@ -218,14 +228,14 @@ final class HttpIngress(
     val stopNs = System.nanoTime()
     if (status >= 300) errCount.incrementAndGet()
     accessLogQ.add(AccessLogRecord(
-      remote = header("X-Forwarded-For")
-        .getOrElse(ex.getRemoteAddress.getAddress.getHostAddress),
-      host = header("Host").getOrElse(""),
-      uri = path + Option(uri.getRawQuery).map("?" + _).getOrElse(""),
-      method = ex.getRequestMethod,
-      path = path,
-      referer = header("Referer").getOrElse(""),
-      user_agent = header("User-Agent").getOrElse(""),
+      remote = canonical(header("X-Forwarded-For")
+        .getOrElse(ex.getRemoteAddress.getAddress.getHostAddress)),
+      host = canonical(header("Host").getOrElse("")),
+      uri = canonical(path + Option(uri.getRawQuery).map("?" + _).getOrElse("")),
+      method = canonical(ex.getRequestMethod),
+      path = canonical(path),
+      referer = canonical(header("Referer").getOrElse("")),
+      user_agent = canonical(header("User-Agent").getOrElse("")),
       status = status,
       latency_ns = stopNs - startNs,
       date_ms = System.currentTimeMillis(),
@@ -268,14 +278,14 @@ final class HttpIngress(
           var dps = 0L
           def send(g: Gts): Unit = { transport.send(Sensision.encode(g)); dps += 1 }
           // (code, msg) of the protocol body parse; None = protocol success
-          val parseErr: Option[(Int, String)] = proto match {
+          val parseErr: Option[(Int, String)] = try proto match {
             case "graphite" => graphiteBody(bytes, send)
             case "influxdb" => influxBody(bytes, query, send)
             case "opentsdb" => opentsdbBody(bytes, send)
             case "prometheus" => promBody(bytes, path, header("Content-Type"), send)
             case "prometheus_remote_write" => remoteWriteBody(bytes, send)
             case _ => warpBody(bytes, transport, n => dps += n)
-          }
+          } catch { case e: Throwable => transport.abort(); throw e } // never leave the POST open
           setDatapoints(dps)
           // the reference ALWAYS Closes the warp channel, even after a
           // handler error (handler.go:173-199) — whatever was already
@@ -431,6 +441,11 @@ final class HttpIngress(
 }
 
 object HttpIngress {
+  /** Distinct access-log values shared per ingress; later ones are kept
+    * as they come.
+    */
+  private val LogValuesCap = 4096
+
   /** Long-running entry point:
     * `runMain graft.streaming.HttpIngress <port> [warpEndpoint]`.
     */
@@ -441,7 +456,7 @@ object HttpIngress {
     val bans = new BanStore(config.bannishmentMs * 20) // ban TTL (see BanStore doc)
     val ingress = new HttpIngress(port,
       now => new HttpWarpTransport(endpoint, now, config.dialTimeoutMs,
-        config.connectionTimeoutMs), bans, config,
+        config.connectionTimeoutMs, config.keepAliveTimeoutMs), bans, config,
       banSleepMs = config.bannishmentMs).start()
     println(s"[ingress] HTTP route table listening on ${ingress.boundPort} -> $endpoint")
     Thread.currentThread().join()

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.core.{Gts, GtsRow, Txn}
+import graft.core.{GraftConfig, Gts, GtsRow, Txn}
 import graft.parsers.GraphiteParser
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -167,7 +167,8 @@ object IngestServer {
     */
   def main(args: Array[String]): Unit = {
     val port = args.headOption.map(_.toInt).getOrElse(2003)
-    val endpoint = args.lift(1).getOrElse("http://127.0.0.1:8080/api/v0/update")
+    val config = GraftConfig.load()
+    val endpoint = args.lift(1).getOrElse(config.warpEndpoint)
     val spool = args.lift(2).map(Path.of(_))
       .getOrElse(Files.createTempDirectory("graft_ingress_spool"))
     Files.createDirectories(spool)
@@ -176,7 +177,9 @@ object IngestServer {
     val spooler = new TcpSpooler(port, spool).start()
     println(s"[ingress] graphite TCP listening on ${spooler.boundPort}, spool=$spool -> $endpoint")
     val q = start(spark, spool, spool.resolve(".checkpoint"),
-      () => new HttpWarpTransport(endpoint), new BanStore(60000L))
+      () => new HttpWarpTransport(endpoint, connectTimeoutMs = config.dialTimeoutMs,
+        readTimeoutMs = config.connectionTimeoutMs, keepAliveTimeoutMs = config.keepAliveTimeoutMs),
+      new BanStore(60000L))
     sys.addShutdownHook { spooler.stop(); q.stop() }
     q.awaitTermination()
   }

@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Session-reuse hygiene: a composed long-lived session (notebook, REPL,
   * service) runs queries back to back WITHOUT Verify/Bench's between-query
@@ -52,7 +53,6 @@ class SessionHygieneSpec extends AnyFunSuite with BeforeAndAfterAll {
       "checks the imperative register on a session built without GraftExtensions")
 
   test("sessions come from GraftSession; test log level comes from log4j2.properties") {
-    import scala.jdk.CollectionConverters._
     def sources(root: String): Seq[(String, String)] = {
       val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
       try walk.iterator().asScala.map(_.toString).filter(_.endsWith(".scala"))
@@ -73,5 +73,18 @@ class SessionHygieneSpec extends AnyFunSuite with BeforeAndAfterAll {
     val leveled = tests.collect { case (f, src) if src.contains(setLevel) => f }
     assert(leveled.isEmpty,
       s"set test log levels in src/test/resources/log4j2.properties, not in $leveled")
+  }
+
+  test("the streaming transports never go back to the JDK's URL connection") {
+    val jdkClient = "HttpURL" + "Connection"
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala/graft/streaming"))
+    val users =
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala"))
+        .filter(f => new String(java.nio.file.Files.readAllBytes(f), "UTF-8").contains(jdkClient))
+        .map(_.toString).toList
+      finally walk.close()
+    assert(users.isEmpty,
+      s"$users use $jdkClient: before each streamed POST on a cached socket it probes the socket " +
+        "with a blocking read under a 1 ms timeout, about 1.1 ms of every Warp push; use HttpWarpTransport")
   }
 }

@@ -20,9 +20,7 @@ class WarpSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
   @volatile private var respondWith: (Int, String) = (200, "OK")
   private var server: HttpServer = _
   private var port: Int = _
-  // one thread per exchange, as a real backend: the writer holds one open
-  // POST per token and closes them in turn, so a server that reads one
-  // body at a time would wait on a channel the writer closes later
+  // one thread per exchange, as a real backend
   private val pool = java.util.concurrent.Executors.newCachedThreadPool()
 
   override def beforeAll(): Unit = {
@@ -82,6 +80,34 @@ class WarpSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(e.error.httpStatus == 401 && e.error.bansToken)
     assert(bans.isBanned("tok123", System.currentTimeMillis()))
     respondWith = (200, "OK")
+  }
+
+  test("two tokens in one partition deliver both bodies to a backend that serves one request at a time") {
+    // the JDK server's default executor runs every exchange on its one
+    // dispatcher thread: while it reads one body it serves nothing else
+    val single = HttpServer.create(new InetSocketAddress(0), 0)
+    val bodies = new ConcurrentLinkedQueue[(String, String)]()
+    single.createContext("/api/v0/update", (ex: HttpExchange) => {
+      bodies.add((ex.getRequestHeaders.getFirst("X-Warp10-Token"), new String(ex.getRequestBody.readAllBytes(), "UTF-8")))
+      ex.sendResponseHeaders(200, -1)
+      ex.close()
+    })
+    single.start()
+    try {
+      val u = s"http://127.0.0.1:${single.getAddress.getPort}/api/v0/update"
+      val w = new TokenRoutedWarpWriter(() => new HttpWarpTransport(u, "now", readTimeoutMs = 5000),
+        new BanStore(60000L))
+      // the writer visits its channels in HashMap order; open the one it
+      // visits last first, so the backend is already reading that body
+      val order = { val m = new java.util.HashMap[String, Unit](); m.put("tokA", ()); m.put("tokB", ()); m.keySet.toArray.map(_.toString) }
+      w.open(0L, 1L)
+      w.process(row(order(1), Gts(Some(1L), "last", Map.empty, GtsValue.long(1))))
+      Thread.sleep(300)
+      w.process(row(order(0), Gts(Some(2L), "first", Map.empty, GtsValue.long(2))))
+      w.close(null)
+      assert(bodies.toArray.toSet == Set(
+        (order(1), "#\r\n1// last{} 1\r\n"), (order(0), "#\r\n2// first{} 2\r\n")))
+    } finally single.stop(0)
   }
 
   test("mid-batch transport death -> task retry -> backend commits the batch exactly ONCE") {
