@@ -543,6 +543,12 @@ object Analytics {
       WHERE len(w) >= 16)
     ORDER BY doc_id"""))
 
+  /** Canonical sorted `k=v,k2=v2` rendering of a label map. */
+  private def labelsCanonical(m: org.apache.spark.sql.Column) =
+    array_join(
+      transform(array_sort(map_entries(m)), e => concat(e.getField("key"), lit("="), e.getField("value"))),
+      ",")
+
   /** Map function surface (the label-manipulation toolkit of §1.4):
     * construction, transform_keys, map_filter, map_concat, element_at,
     * canonicalized for comparison. Oracle reconstructs the expected
@@ -555,7 +561,7 @@ object Analytics {
             lit("u"), col("user_id").cast("string"),
             lit("drop"), lit("x")).as("m"))
     e.select(col("event_id"),
-        graft.functions.IngestSql.labelsCanonical(
+        labelsCanonical(
           map_concat(
             transform_keys(
               map_filter(col("m"), (k, _) => k =!= "drop"),
@@ -2606,11 +2612,13 @@ object Analytics {
     FROM events WHERE event_id < 2000 ORDER BY event_id"""))
 
   /** The seconds-vs-millis-vs-zero timestamp heuristic
-    * (catalyser/opentsdb.go:127-144) as a pure column expression, exercised
-    * over synthesized epochs covering all branches incl. both sides of the
-    * 0xFFFFFFFF boundary. Fixed "now" literal keeps it deterministic.
+    * (catalyser/opentsdb.go:127-144) through `Gts.normalizeEpochUs`, the
+    * function every parser calls, exercised over synthesized epochs
+    * covering all branches incl. both sides of the 0xFFFFFFFF boundary.
+    * Fixed "now" literal keeps it deterministic.
     */
   val qTsHeuristic: Q = Q("q_ts_heuristic", (s, dir) => {
+    import s.implicits._
     Tables.events(s, dir)
       .select(col("event_id"),
         expr(s"""CASE event_id % 5
@@ -2619,10 +2627,9 @@ object Analytics {
           WHEN 2 THEN ts_us DIV 1000
           WHEN 3 THEN 4294967294L
           ELSE 4294967295L END""").as("raw_ts"))
-      .select(col("event_id"), col("raw_ts"),
-        expr(s"""CASE WHEN raw_ts = 0 THEN ${NowUsLiteral}L
-          WHEN raw_ts < 4294967295L THEN raw_ts * 1000000
-          ELSE raw_ts * 1000 END""").as("norm_us"))
+      .as[(Long, Long)]
+      .map { case (eid, raw) => (eid, raw, graft.core.Gts.normalizeEpochUs(raw, NowUsLiteral)) }
+      .toDF("event_id", "raw_ts", "norm_us")
       .orderBy("event_id")
   }, Some(s"""SELECT event_id, raw_ts,
     CASE WHEN raw_ts = 0 THEN $NowUsLiteral

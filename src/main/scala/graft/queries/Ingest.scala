@@ -1,10 +1,9 @@
 package graft.queries
 
 import graft.{Q, Tables}
-import graft.core.{Gts, WarpError}
-import graft.functions.IngestSql
-import graft.parsers.{InfluxLineParser, PromParser}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.core.{Gts, Sensision, WarpError}
+import graft.parsers.{GraphiteParser, InfluxLineParser, OpenTsdbParser, PromParser}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The ingest layer (SURVEY.md §2 Table A): every protocol parser /
@@ -13,14 +12,14 @@ import org.apache.spark.sql.functions._
   * plan) so the DuckDB oracle can independently reconstruct the expected
   * output from the source columns.
   *
-  * Two styles, deliberately:
-  *  - SQL-expressible operators (graphite cascade, ts heuristic, token
-  *    coalesce, batching, encoding) run as pure column pipelines —
-  *    codegen'd, pushdown-friendly;
-  *  - grammar-heavy parsers (influx line protocol, prometheus exposition)
-  *    run the REAL pure-Scala parsers through typed `Dataset.flatMap`
-  *    (SURVEY.md §4.3: the one place typed transforms beat SQL), with the
-  *    oracle reconstructing expected rows relationally.
+  * One implementation per ingest law: every protocol parse (graphite,
+  * influx, OpenTSDB, prometheus), the TCP auth prefix and the Sensision
+  * encoder run the SAME Scala code that serves HTTP and TCP pushes,
+  * through typed `Dataset.flatMap` (SURVEY.md §4.3: the one place typed
+  * transforms beat SQL), so the oracle, which reconstructs the expected
+  * rows relationally, certifies the served path. Operators with no
+  * served counterpart (token coalesce, batching, error classes, rollups)
+  * stay column pipelines.
   *
   * Scale: every query here is a stateless per-row transform — no shuffle
   * except the final ORDER BY for determinism (which the driver's sorted
@@ -149,41 +148,36 @@ object Ingest {
   private def canonical(m: Map[String, String]): String =
     m.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }.mkString(",")
 
-  /** Graphite line parse as a pure column cascade: split_part tokenizing
-    * (graphite.go:315), float→int→bool→string inference (:332-367),
-    * hierarchy labels (:381-403), `;k=v` tag merge (:376-392), ts
-    * heuristic (:370). Line synthesized as
-    * `<type>.m<uid>;dc=east <value> <ts>`.
+  /** `<type>.m<uid>;dc=east <value> <ts>` graphite lines by event_id: the
+    * value token is a double, long, bool or string by event_id % 4 and the
+    * timestamp alternates seconds and millis.
+    */
+  private def graphiteLines(s: SparkSession, dir: String): Dataset[(Long, String)] = {
+    import s.implicits._
+    Tables.events(s, dir).select(col("event_id"), expr("""concat(event_type, '.m',
+        CAST(user_id % 10 AS STRING), ';dc=east ',
+        CASE CAST(event_id % 4 AS INT)
+          WHEN 0 THEN CAST(value AS STRING)
+          WHEN 1 THEN CAST(user_id AS STRING)
+          WHEN 2 THEN IF(value > 50, 'true', 'False')
+          ELSE concat('v', event_type) END, ' ',
+        CAST(IF(event_id % 2 = 0, ts_us DIV 1000000, ts_us DIV 1000) AS STRING))""").as("line"))
+      .as[(Long, String)]
+  }
+
+  /** Graphite line parse through the REAL GraphiteParser: single-space
+    * tokenizing (graphite.go:315), float→int→bool→string inference
+    * (:332-367), hierarchy labels (:381-403), `;k=v` tag merge (:376-392),
+    * ts heuristic (:370).
     */
   val graphiteParse: Q = Q("graphite_parse", (s, dir) => {
-    import IngestSql._
-    val e = Tables.events(s, dir)
-      .withColumn("vstr", expr("""CASE CAST(event_id % 4 AS INT)
-        WHEN 0 THEN CAST(value AS STRING)
-        WHEN 1 THEN CAST(user_id AS STRING)
-        WHEN 2 THEN IF(value > 50, 'true', 'False')
-        ELSE concat('v', event_type) END"""))
-      .withColumn("tsstr", expr("""CAST(IF(event_id % 2 = 0,
-        ts_us DIV 1000000, ts_us DIV 1000) AS STRING)"""))
-      .withColumn("line", expr(
-        "concat(event_type, '.m', CAST(user_id % 10 AS STRING), ';dc=east ', vstr, ' ', tsstr)"))
-    // parse back from `line` only
-    val t0 = split_part(col("line"), lit(" "), lit(1))
-    val vTok = split_part(col("line"), lit(" "), lit(2))
-    val tsTok = split_part(col("line"), lit(" "), lit(3))
-    val name = split_part(t0, lit(";"), lit(1))
-    e.select(
-        col("event_id"),
-        name.as("name"),
-        concat(lit("0="), split_part(name, lit("."), lit(1)),
-          lit(",1="), split_part(name, lit("."), lit(2)),
-          lit(","), split_part(t0, lit(";"), lit(2))).as("labels_str"),
-        graphiteVtype(vTok).as("vtype"),
-        graphiteVLong(vTok).as("v_long"),
-        graphiteVDouble(vTok).as("v_double"),
-        graphiteVBool(vTok).as("v_bool"),
-        graphiteVString(vTok).as("v_str"),
-        normalizeEpochUs(tsTok.cast("bigint"), lit(0L)).as("ts_us"))
+    import s.implicits._
+    graphiteLines(s, dir).flatMap { case (eid, line) =>
+      GraphiteParser.parseLine(line, parse = true, 0L).toOption.map { g =>
+        val r = Gts.toRow(g)
+        (eid, r.name, canonical(r.labels), r.vtype, r.v_long, r.v_double, r.v_bool, r.v_str, r.ts_us)
+      }
+    }.toDF("event_id", "name", "labels_str", "vtype", "v_long", "v_double", "v_bool", "v_str", "ts_us")
       .orderBy("event_id")
   }, Some("""SELECT event_id,
       event_type || '.m' || CAST(user_id % 10 AS VARCHAR) AS name,
@@ -301,29 +295,28 @@ object Ingest {
         THEN 1 ELSE 0 END AS BIGINT) AS failfast_error
     FROM events GROUP BY event_id // 100 ORDER BY req"""))
 
-  /** OpenTSDB JSON decode via Spark-native from_json (A13/A14: the
-    * schema-driven replacement for the reference's format sniffer +
-    * streaming json.Decoder, opentsdb.go:37-58,109-124), ts heuristic
+  /** OpenTSDB JSON bodies (built with `to_json`) through the REAL
+    * OpenTsdbParser (A13/A14, opentsdb.go:37-58,109-124), ts heuristic
     * included; JSON numbers decode to double exactly like Go's
     * encoding/json → interface{} (opentsdb.go:19-28).
     */
   val opentsdbParse: Q = Q("opentsdb_parse", (s, dir) => {
-    val e = Tables.events(s, dir)
-      .withColumn("body", to_json(struct(
+    import s.implicits._
+    val bodies = Tables.events(s, dir).select(col("event_id"), to_json(struct(
         concat(lit("sys."), col("event_type")).as("metric"),
         expr("IF(event_id % 2 = 0, ts_us DIV 1000000, ts_us DIV 1000)").as("timestamp"),
         col("value").as("value"),
         map(lit("eid"), col("event_id").cast("string"),
-            lit("host"), concat(lit("u"), (col("user_id") % 20).cast("string"))).as("tags"))))
-    val parsed = e.select(col("event_id"), from_json(col("body"),
-      org.apache.spark.sql.types.StructType.fromDDL(
-        "metric STRING, timestamp BIGINT, value DOUBLE, tags MAP<STRING,STRING>")).as("dp"))
-    parsed.select(
-        col("event_id"),
-        col("dp.metric").as("metric"),
-        IngestSql.normalizeEpochUs(col("dp.timestamp"), lit(0L)).as("ts_us"),
-        col("dp.value").as("v_double"),
-        IngestSql.labelsCanonical(col("dp.tags")).as("labels_str"))
+            lit("host"), concat(lit("u"), (col("user_id") % 20).cast("string"))).as("tags")))
+      .as("body"))
+    bodies.as[(Long, String)].flatMap { case (eid, body) =>
+      OpenTsdbParser.parse(body, 0L).fold(
+        _ => Seq.empty[(Long, String, Option[Long], Option[Double], String)],
+        gts => gts.map { g =>
+          val r = Gts.toRow(g)
+          (eid, r.name, r.ts_us, r.v_double, canonical(r.labels))
+        })
+    }.toDF("event_id", "metric", "ts_us", "v_double", "labels_str")
       .orderBy("event_id")
   }, Some("""SELECT event_id, 'sys.' || event_type AS metric,
       CASE WHEN event_id % 2 = 0 THEN (epoch_us(ts) // 1000000) * 1000000
@@ -512,17 +505,17 @@ object Ingest {
           CAST(user_id % 5 AS VARCHAR) || ',job=' || event_type END AS labels_str
     FROM events ORDER BY event_id"""))
 
-  /** Sensision encoding as a column pipeline (core/warp.go:423-478): the
-    * graphite-parsed rows of `graphite_parse` re-encoded. Go %f fixed
-    * 6-decimal floats via format_string; URL-encoding paths are covered by
-    * the Scala encoder's unit tests (names here are URL-safe by
-    * construction).
+  /** Sensision encoding through the REAL encoder (core/warp.go:423-478):
+    * the graphite lines of `graphite_parse`, parsed and encoded by
+    * `Sensision.encode`, the code both Warp writers call. Go %f fixed
+    * 6-decimal doubles; the names here are URL-safe by construction
+    * (`sensision_encode_unsafe` covers escaping).
     */
   val sensisionEncode: Q = Q("sensision_encode", (s, dir) => {
-    val parsed = graphiteParse.fn(s, dir)
-    parsed.select(col("event_id"),
-        IngestSql.sensisionLine(col("ts_us"), col("name"), col("labels_str"),
-          col("vtype"), col("v_long"), col("v_double"), col("v_bool"), col("v_str")).as("sensision"))
+    import s.implicits._
+    graphiteLines(s, dir).flatMap { case (eid, line) =>
+      GraphiteParser.parseLine(line, parse = true, 0L).toOption.map(g => (eid, Sensision.encode(g)))
+    }.toDF("event_id", "sensision")
       .orderBy("event_id")
   }, Some("""SELECT event_id,
       CAST(ts_us AS VARCHAR) || '// ' || name || '{' || labels_str || '} ' ||
@@ -711,15 +704,21 @@ object Ingest {
     GROUP BY token, day ORDER BY token, day"""))
 
   /** Graphite TCP first-line `TOKEN@.` prefix extraction
-    * (graphite.go:240-267) as regexp columns.
+    * (graphite.go:240-267) through `GraphiteParser.extractTcpToken`, the
+    * TCP edge's auth check; the rest is the line minus the prefix length.
+    * A line without the prefix yields nothing, as the edge spools nothing
+    * for an unauthenticated connection.
     */
   val graphiteTcpToken: Q = Q("graphite_tcp_token", (s, dir) => {
+    import s.implicits._
     val e = Tables.events(s, dir).select(col("event_id"),
       expr("""concat('tok', CAST(user_id AS STRING), '@.', event_type, '.m ',
         CAST(value AS STRING))""").as("line"))
-    e.select(col("event_id"),
-        regexp_extract(col("line"), "^([^@]*)@\\.", 1).as("token"),
-        regexp_replace(col("line"), "^[^@]*@\\.", "").as("rest"))
+    e.as[(Long, String)].flatMap { case (eid, line) =>
+      GraphiteParser.extractTcpToken(line).map { case (token, len) =>
+        (eid, token, line.substring(len))
+      }
+    }.toDF("event_id", "token", "rest")
       .orderBy("event_id")
   }, Some("""SELECT event_id,
       'tok' || CAST(user_id AS VARCHAR) AS token,

@@ -23,10 +23,20 @@ import scala.jdk.CollectionConverters._
   * token universe, so broadcast is safe, unlike data-sized tables.
   * Time is injected (`nowMs`) — deterministic in tests, `
   * System.currentTimeMillis` in production wiring.
+  *
+  * One ban set per JVM, like the reference's process-wide map: a store
+  * that a task deserializes (the Warp writer's copy) resolves to the
+  * instance already in that JVM, so a ban the sink records in a task is
+  * the ban the driver and the next batch see. The registry holds stores
+  * weakly, so none outlives its owner.
   */
 final class BanStore(val banDurationMs: Long) extends Serializable {
+  private val id = java.util.UUID.randomUUID().toString
   // boxed values: a missing key must surface as null, not unbox to 0L
   private val bans = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+  BanStore.resolve(this)
+
+  private def readResolve(): AnyRef = BanStore.resolve(this)
 
   /** Ban (or re-ban, refreshing the window) a token. */
   def ban(token: String, nowMs: Long): Unit =
@@ -49,6 +59,20 @@ final class BanStore(val banDurationMs: Long) extends Serializable {
     }.sorted
 
   def size: Int = bans.size()
+}
+
+object BanStore {
+  // keyed by each store's own id String, which only the store holds, so
+  // an entry goes when its store does; the value must not hold it either
+  private val live = new java.util.WeakHashMap[String, java.lang.ref.WeakReference[BanStore]]()
+
+  /** The store with `s`'s id already in this JVM, or `s`, registered. */
+  private def resolve(s: BanStore): BanStore = live.synchronized {
+    Option(live.get(s.id)).flatMap(r => Option(r.get)).getOrElse {
+      live.put(s.id, new java.lang.ref.WeakReference(s))
+      s
+    }
+  }
 }
 
 /** One metered point for the streaming quota gate. */

@@ -348,13 +348,15 @@ object HttpWarpTransport {
   * transport PER TOKEN within a partition (the reference opens one Warp
   * client per connection; after the engine repartitions by data, tokens
   * interleave). The backend's error body is classified through the
-  * ordered taxonomy (core/warp.go:280-421) and surfaces as a
-  * WarpSinkException carrying the mapped HTTP status; the failure also
-  * feeds the ban store, so a backend `invalid token` answer bans the
-  * token for the configured window — the A28 lifecycle. Structured
-  * Streaming retries a failed task, and the reference's one-shot replay
-  * buffer (core/warp.go:180,260 — see SURVEY.md §2 gaps: don't copy) is
-  * replaced by that idempotent retry over aborted channels.
+  * ordered taxonomy (core/warp.go:280-421). A token-level error (invalid,
+  * expired, revoked) bans the token for the configured window — the A28
+  * lifecycle — and drops only that token's channel: the task succeeds,
+  * as the reference drops one connection (catalyser/graphite.go:288-296)
+  * while the others keep flowing. Any other error surfaces as a
+  * WarpSinkException carrying the mapped HTTP status and fails the task.
+  * Structured Streaming retries a failed task, and the reference's
+  * one-shot replay buffer (core/warp.go:180,260 — see SURVEY.md §2 gaps:
+  * don't copy) is replaced by that idempotent retry over aborted channels.
   */
 final class TokenRoutedWarpWriter(
     newTransport: () => WarpTransport,
@@ -396,7 +398,7 @@ final class TokenRoutedWarpWriter(
       open_.forEach { (token, t) =>
         t.close().foreach { body =>
           val cls = TokenBans.recordSinkFailure(bans, body, token, System.currentTimeMillis())
-          if (firstErr.isEmpty) firstErr = Some(new WarpSinkException(cls))
+          if (!cls.bansToken && firstErr.isEmpty) firstErr = Some(new WarpSinkException(cls))
         }
       }
     } catch { case e: Throwable => abortAll(); throw e }

@@ -98,6 +98,40 @@ class IngestServerSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally spooler.stop()
   }
 
+  test("a token Warp rejects is banned on the driver; the query and the other tokens go on") {
+    val spool = Files.createTempDirectory("graft_ing3")
+    val ckpt = Files.createTempDirectory("graft_ing3_ck")
+    val spooler = new TcpSpooler(0, spool).start()
+    val bans = new BanStore(3600000L)
+    IngestServerSpec.delivered.clear()
+    IngestServerSpec.opened.clear()
+    try {
+      sendConn(spooler.boundPort, Seq("tokA@.sys.cpu 0.5 1546420308"))
+      sendConn(spooler.boundPort, Seq("tokC@.other.metric 7 1546420310"))
+      awaitSpool(spooler, 2)
+      // local[2]: one attempt per task, so a failed task stops the query
+      val q = IngestServer.start(spark, spool, ckpt, () => new RejectingTransport("tokA"), bans)
+      try {
+        q.processAllAvailable()
+        assert(q.isActive && q.exception.isEmpty)
+        assert(IngestServerSpec.delivered.toArray.toSeq ==
+          Seq("tokC:" + enc("other.metric 7 1546420310")))
+        assert(bans.isBanned("tokA", System.currentTimeMillis()),
+          "the ban must reach the driver's store, not the task's copy")
+        IngestServerSpec.delivered.clear()
+        IngestServerSpec.opened.clear()
+        sendConn(spooler.boundPort, Seq("tokA@.sys.cpu 1.5 1546420311"))
+        sendConn(spooler.boundPort, Seq("tokC@.other.metric 8 1546420312"))
+        awaitSpool(spooler, 4)
+        q.processAllAvailable()
+        assert(q.isActive)
+        assert(!IngestServerSpec.opened.contains("tokA"), s"opened=${IngestServerSpec.opened}")
+        assert(IngestServerSpec.delivered.toArray.toSeq ==
+          Seq("tokC:" + enc("other.metric 8 1546420312")))
+      } finally q.stop()
+    } finally spooler.stop()
+  }
+
   private def enc(metricLine: String): String =
     Sensision.encode(GraphiteParser.parseLine(metricLine, false)
       .getOrElse(fail(s"test line must parse: $metricLine")))
@@ -108,6 +142,8 @@ object IngestServerSpec {
     * deliveries land here (the standard foreach-sink test pattern).
     */
   val delivered = new ConcurrentLinkedQueue[String]()
+  /** Tokens a [[RejectingTransport]] opened a channel for. */
+  val opened = new ConcurrentLinkedQueue[String]()
 }
 
 /** In-memory transport recording token:sensision-line pairs. */
@@ -117,5 +153,23 @@ final class RecordingTransport extends WarpTransport {
   override def send(line: String): Unit =
     IngestServerSpec.delivered.add(s"$token:$line"): Unit
   override def close(): Option[String] = None
+  override def abort(): Unit = ()
+}
+
+/** Commits a channel's lines to [[IngestServerSpec.delivered]] when it
+  * closes, except for `rejected`, which the backend answers with
+  * `Invalid token` and which commits nothing.
+  */
+final class RejectingTransport(rejected: String) extends WarpTransport {
+  private var token: String = _
+  private val lines = Seq.newBuilder[String]
+  override def open(token: String, txn: String): Unit = {
+    this.token = token
+    IngestServerSpec.opened.add(token): Unit
+  }
+  override def send(line: String): Unit = lines += line
+  override def close(): Option[String] =
+    if (token == rejected) Some("io.warp10.script.WarpScriptException: Invalid token")
+    else { lines.result().foreach(l => IngestServerSpec.delivered.add(s"$token:$l")); None }
   override def abort(): Unit = ()
 }

@@ -70,14 +70,21 @@ class WarpSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("error body classified through the ordered taxonomy -> typed sink exception") {
-    respondWith = (500, "io.warp10.script.WarpScriptException: Token Expired")
+    respondWith = (500, "You exceed your Monthly Active Data Streams limit for application 'myapp' (100).")
     val bans = new BanStore(60000L)
     val w = writer(bans)
     w.open(1L, 2L)
     w.process(row("tok123", Gts(Some(1L), "m", Map.empty, GtsValue.long(1))))
     val e = intercept[WarpSinkException](w.close(null))
-    assert(e.error == WarpError.ExpiredToken("tok123"))
-    assert(e.error.httpStatus == 401 && e.error.bansToken)
+    assert(e.error == WarpError.MadsExceeded("myapp", "100"))
+    assert(e.error.httpStatus == 429 && !e.error.bansToken)
+    assert(!bans.isBanned("tok123", System.currentTimeMillis()))
+    // a token-level error bans the token and drops its channel only
+    respondWith = (500, "io.warp10.script.WarpScriptException: Token Expired")
+    val w2 = writer(bans)
+    w2.open(1L, 3L)
+    w2.process(row("tok123", Gts(Some(1L), "m", Map.empty, GtsValue.long(1))))
+    w2.close(null)
     assert(bans.isBanned("tok123", System.currentTimeMillis()))
     respondWith = (200, "OK")
   }
